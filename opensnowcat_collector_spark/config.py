@@ -16,6 +16,15 @@ ZERO_UUID = "00000000-0000-0000-0000-000000000000"
 PAYLOAD_DATA_SCHEMA = "iglu:com.snowplowanalytics.snowplow/payload_data/jsonschema/1-0-4"
 COLLECTOR_PAYLOAD_SCHEMA = "iglu:com.snowplowanalytics.snowplow/CollectorPayload/thrift/1-0-0"
 
+#: event endpoints served by the collector (SURVEY §2.1); anything else is
+#: an ops endpoint or 404 and produces no event.  Read by the receiver
+#: (Python ``re``) and by the pipeline (Spark ``rlike``): the pattern means
+#: the same in both dialects.
+EVENT_PATH_RE = (
+    r"^(/r/.*|/i|/ice\.png|/com\.snowplowanalytics\.snowplow/tp2"
+    r"|/com\.segment/v1/[itpsga]|/com\.amplitude/2/(httpapi|batch)|/[^/]+/[^/]+)$"
+)
+
 
 @dataclass(frozen=True)
 class CookieConfig:

@@ -150,7 +150,7 @@ def collector_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # T7/T8 bridge round-trip: synthesize Segment + Amplitude requests from
-# events, run the REAL pipeline (enrich + build_events, incl. the
+# events, run the REAL pipeline (route + run, incl. the
 # amplitude explode fan-out), then extract every constructed envelope
 # field back out (incl. unbase64'ing ue_px) and compare to the oracle's
 # directly-computed truth.
@@ -254,7 +254,7 @@ def collector_bridge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("string").alias("sp_anonymous"),
         F.col("ts").alias("request_time"),
     )
-    res = pipeline.run(raw, _CFG)
+    res = pipeline.run(pipeline.route(raw, _CFG), _CFG)
     body = F.col("body")
     d0 = "$.data[0]."
     ue_px = F.decode(F.unbase64(F.get_json_object(body, d0 + "ue_px")), "UTF-8")
@@ -587,7 +587,7 @@ def collector_split_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cast(NULL as string) as sp_anonymous",
         "ts as request_time",
     )
-    res = pipeline.run(raw, _SPLIT_CFG)
+    res = pipeline.run(pipeline.route(raw, _SPLIT_CFG), _SPLIT_CFG)
 
     goods = res.good.groupBy("request_id").agg(
         F.count(F.lit(1)).alias("n_good"),

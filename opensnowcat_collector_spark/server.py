@@ -31,15 +31,12 @@ from http.cookies import SimpleCookie
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qsl, urlencode, urlsplit
 
-from .config import ZERO_UUID, CollectorConfig
+from .config import EVENT_PATH_RE, ZERO_UUID, CollectorConfig
 from .schema import PIXEL_GIF_BASE64
 from .transforms.privacy import _URL_HOST_RE
 
 PIXEL_GIF = base64.b64decode(PIXEL_GIF_BASE64)
-_EVENT_PATH_RE = re.compile(
-    r"^(/r/.*|/i|/ice\.png|/com\.snowplowanalytics\.snowplow/tp2"
-    r"|/com\.segment/v1/[itpsga]|/com\.amplitude/2/(httpapi|batch)|/[^/]+/[^/]+)$"
-)
+_EVENT_PATH_RE = re.compile(EVENT_PATH_RE)
 _OPS_PATHS = {"/health", "/sink-health", "/crossdomain.xml", "/robots.txt", "/"}
 
 

@@ -6,11 +6,13 @@ becomes the micro-batch boundary; BufferConfig maps to
 ``maxOffsetsPerTrigger``; flush-on-shutdown becomes checkpoint recovery
 (a strictly stronger guarantee).
 
-The pipeline's good/bad split requires two outputs per micro-batch, so the
-job uses ``foreachBatch`` and runs the *batch* pipeline inside it — the
-classic good/quarantine pattern (SURVEY §1.2) with a single pass over each
-micro-batch (the enriched frame is persisted per epoch, both branches read
-the cache, then it is released).
+The dataflow is built once per streaming query: ``start`` applies
+``pipeline.route`` (the per-row half) to the source, so the engine plans
+routing at every trigger without Python.  The good/bad split needs two
+outputs per micro-batch, so the per-batch half runs in ``foreachBatch`` —
+the classic good/quarantine pattern (SURVEY §1.2) with a single pass over
+each micro-batch: the routed batch is persisted, ``pipeline.run`` and both
+sink writes read the cache, then it is released.
 """
 
 from __future__ import annotations
@@ -59,15 +61,15 @@ class StreamingCollector:
             F.from_json(F.col("value").cast("string"), RAW_REQUEST_SCHEMA).alias("r")
         ).select("r.*")
 
-    def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        res = pipeline.run(batch_df, self.cfg)
-        good = res.good.persist()
+    def process_batch(self, routed: DataFrame, epoch_id: int) -> None:
+        """One micro-batch of ``pipeline.route`` rows -> both sinks."""
+        routed = routed.persist()
         try:
-            self.good_sink.write(good, epoch_id)
-            bad = res.bad
-            self.bad_sink.write(bad, epoch_id)
+            res = pipeline.run(routed, self.cfg)
+            self.good_sink.write(res.good, epoch_id)
+            self.bad_sink.write(res.bad, epoch_id)
         finally:
-            good.unpersist()
+            routed.unpersist()
 
     def start(
         self,
@@ -76,7 +78,8 @@ class StreamingCollector:
         available_now: bool = False,
     ) -> StreamingQuery:
         writer = (
-            source.writeStream.foreachBatch(self.process_batch)
+            pipeline.route(source, self.cfg)
+            .writeStream.foreachBatch(self.process_batch)
             .option("checkpointLocation", checkpoint_dir)
             .outputMode("update")
         )

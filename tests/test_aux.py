@@ -297,3 +297,16 @@ def test_ensure_shipped_pins_parser_escape_mode(spark):
         )
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+
+
+def test_ensure_shipped_pins_every_session(spark):
+    """The escape-mode conf is per session: a second session on the same
+    SparkContext (``newSession()``, as an external harness may create)
+    must be pinned too, although the package is already shipped."""
+    from opensnowcat_collector_spark import ship
+
+    ship.ensure_shipped(spark)  # the context is shipped
+    other = spark.newSession()
+    other.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    ship.ensure_shipped(other)
+    assert other.conf.get("spark.sql.parser.escapedStringLiterals") == "false"

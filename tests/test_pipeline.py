@@ -33,13 +33,13 @@ CFG = CollectorConfig(
 @pytest.fixture(scope="module")
 def result(spark):
     raw = spark.createDataFrame(raw_requests(), RAW_REQUEST_SCHEMA)
-    res = pipeline.run(raw, CFG)
+    res = pipeline.run(pipeline.route(raw, CFG), CFG)
     good_rows = [r.asDict() for r in res.good.collect()]
     good = {}
     for r in good_rows:
         good.setdefault(r["request_id"], r)
     bad = [r.asDict() for r in res.bad.collect()]
-    enriched = {r["request_id"]: r.asDict() for r in res.enriched.collect()}
+    enriched = {r["request_id"]: r.asDict() for r in pipeline.enrich(raw, CFG).collect()}
     return good, bad, enriched, good_rows
 
 
@@ -198,7 +198,7 @@ def test_duplicate_key_survives_exception_policy_session(spark):
         raw = spark.createDataFrame(
             [_req(99, querystring="e=pv&e=pp")], RAW_REQUEST_SCHEMA
         )
-        res = pipeline.run(raw, CFG)
+        res = pipeline.run(pipeline.route(raw, CFG), CFG)
         rows = res.good.collect()
         assert [r["request_id"] for r in rows] == ["req-0099"]
     finally:
@@ -234,7 +234,7 @@ def test_bridges_disabled_fall_through(spark):
     ]
     cfg = CollectorConfig(deterministic_now_ms=1705320000000)  # bridges off
     raw = spark.createDataFrame(reqs, RAW_REQUEST_SCHEMA)
-    good = pipeline.run(raw, cfg).good.collect()
+    good = pipeline.run(pipeline.route(raw, cfg), cfg).good.collect()
     by_req = {r["request_id"]: r for r in good}
     assert len(good) == 2  # no amplitude fan-out
     assert by_req["req-0000"]["body"] == SEGMENT_PAGE_BODY

@@ -11,9 +11,12 @@ import pytest
 from opensnowcat_collector_spark.engine import registry
 
 
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _plan(spark, sf_dir, name: str) -> str:
-    qs = registry.all_queries()
-    return qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    return _executed(registry.all_queries()[name](spark, sf_dir))
 
 
 def test_curation_pipeline_single_explode(spark, sf_dir):
@@ -44,27 +47,52 @@ def test_q3_broadcasts_dim_and_pushes_filters(spark, sf_dir):
     assert re.search(r"PushedFilters: \[[^\]]*(GreaterThan|LessThan|EqualTo)", plan), plan
 
 
-def test_split_pipeline_single_python_stage(spark):
-    """Only the oversized subset pays a Python stage, and exactly one.
+def _capture_checkpoints(spark, monkeypatch) -> list:
+    """Record every frame ``localCheckpoint`` is called on: once
+    checkpointed, a plan shows the split stage only as an ExistingRDD
+    scan, so its Python stage is visible on the frame before."""
+    frame_cls = type(spark.range(1))  # the session's concrete DataFrame
+    seen: list = []
+    original = frame_cls.localCheckpoint
 
-    Since the r14 optimization the split stage is localCheckpoint'd in
-    pipeline.run (its two consumers — split goods and bad rows — each
-    re-ran the whole mapInPandas before), so the ONE MapInPandas lives
-    in split_out's plan and the good/bad plans read the checkpoint
-    (ExistingRDD) instead of re-expanding the Python stage."""
+    def spy(self, *args, **kwargs):
+        seen.append(self)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    return seen
+
+
+def test_split_pipeline_single_python_stage(spark, monkeypatch):
+    """``route`` is one narrow chain: one scan, no Union and no Python.
+    ``run`` adds exactly one Python stage, the MapInPandas split of the
+    oversized subset, and it lives inside the split checkpoint: the good
+    and bad plans read the checkpoint (ExistingRDD) instead of
+    re-expanding the Python stage."""
     from opensnowcat_collector_spark import pipeline
     from opensnowcat_collector_spark.config import CollectorConfig
     from opensnowcat_collector_spark.schema import RAW_REQUEST_SCHEMA
 
     from .fixtures import raw_requests
 
+    cfg = CollectorConfig(deterministic_now_ms=1705320000000)
     raw = spark.createDataFrame(raw_requests(), RAW_REQUEST_SCHEMA)
-    res = pipeline.run(raw, CollectorConfig(deterministic_now_ms=1705320000000))
-    split_plan = res.split_out_raw._jdf.queryExecution().executedPlan().toString()
+    routed = pipeline.route(raw, cfg)
+    route_plan = _executed(routed)
+    assert route_plan.count("Scan") == 1, route_plan
+    assert "Union" not in route_plan, route_plan
+    for python_node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert python_node not in route_plan, route_plan
+
+    checkpointed = _capture_checkpoints(spark, monkeypatch)
+    res = pipeline.run(routed, cfg)
+    assert len(checkpointed) == 1
+    split_plan = _executed(checkpointed[0])
     assert split_plan.count("MapInPandas") == 1, split_plan
-    good_plan = res.good._jdf.queryExecution().executedPlan().toString()
-    assert good_plan.count("MapInPandas") == 0, good_plan
-    assert "ExistingRDD" in good_plan, good_plan
+    for out in (res.good, res.bad):
+        plan = _executed(out)
+        assert plan.count("MapInPandas") == 0, plan
+        assert "ExistingRDD" in plan, plan
 
 
 def test_topk_avoids_global_sort(spark, sf_dir):
@@ -257,15 +285,18 @@ def test_langid_profiles_broadcast_scoring(spark, sf_dir):
 # ---- r7/r8 additions (VERDICT r7 item 4) ----------------------------------
 
 
-def test_split_accounting_python_only_on_oversized(spark, sf_dir):
-    """Since the r14 optimization the two pipeline branches (good + bad)
-    share ONE checkpointed split stage — the graded plan shows the
-    checkpoint scan (ExistingRDD) and ZERO re-expanded MapInPandas nodes
-    where it previously re-ran the Python stage once per branch; the
-    single-Python-stage property itself is pinned on split_out_raw in
-    test_split_pipeline_single_python_stage.  The accounting joins never
-    degenerate to nested-loop shapes."""
+def test_split_accounting_python_only_on_oversized(spark, sf_dir, monkeypatch):
+    """The graded query runs the pipeline's one Python stage exactly once:
+    the MapInPandas split sits inside the single split checkpoint, over a
+    Union-free routed chain, and the query's own plan reads the
+    checkpoint (ExistingRDD) with ZERO re-expanded MapInPandas nodes.  The
+    accounting joins never degenerate to nested-loop shapes."""
+    checkpointed = _capture_checkpoints(spark, monkeypatch)
     plan = _plan(spark, sf_dir, "collector_split_accounting")
+    assert len(checkpointed) == 1
+    split_plan = _executed(checkpointed[0])
+    assert split_plan.count("MapInPandas") == 1, split_plan
+    assert "Union" not in split_plan, split_plan
     assert plan.count("MapInPandas") == 0, plan
     assert "ExistingRDD" in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan

@@ -183,7 +183,7 @@ def test_landing_rows_flow_through_pipeline(server, spark):
         .withColumn("request_time", F.col("request_time").cast("timestamp"))
     )
     cfg = CollectorConfig(deterministic_now_ms=1705320000000)
-    res = pipeline.run(raw, cfg)
+    res = pipeline.run(pipeline.route(raw, cfg), cfg)
     good = res.good.collect()
     assert len(good) == 3
     assert sorted(r["network_user_id"] for r in good) == ["u-0", "u-1", "u-2"]

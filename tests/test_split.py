@@ -185,7 +185,7 @@ def test_pipeline_split_oversized(spark):
         good_sink=SinkConfig(kind="stdout", max_bytes=900),
     )
     raw = spark.createDataFrame(reqs, RAW_REQUEST_SCHEMA)
-    res = pipeline.run(raw, cfg)
+    res = pipeline.run(pipeline.route(raw, cfg), cfg)
     good = res.good.collect()
     bad = res.bad.collect()
     # req-0 is small -> one good; req-1 splits into >=2 goods; req-2 -> bad
@@ -251,7 +251,7 @@ def test_split_no_cross_match_on_shared_request_id(spark):
         good_sink=SinkConfig(kind="stdout", max_bytes=900),
     )
     raw = spark.createDataFrame(reqs, RAW_REQUEST_SCHEMA)
-    good = pipeline.run(raw, cfg).good.collect()
+    good = pipeline.run(pipeline.route(raw, cfg), cfg).good.collect()
     assert len(good) >= 4 and all(r["request_id"] == "req-0000" for r in good)
     recovered: dict[str, list] = {"a": [], "b": []}
     for r in sorted(good, key=lambda r: r["split_index"]):

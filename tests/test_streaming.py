@@ -18,9 +18,9 @@ from opensnowcat_collector_spark.streaming.job import StreamingCollector
 from .fixtures import raw_requests
 
 
-def _write_landing(tmpdir: str, rows: list[dict]) -> None:
+def _write_landing(tmpdir: str, rows: list[dict], name: str = "batch0.json") -> None:
     os.makedirs(tmpdir, exist_ok=True)
-    with open(os.path.join(tmpdir, "batch0.json"), "w") as f:
+    with open(os.path.join(tmpdir, name), "w") as f:
         for r in rows:
             r = dict(r)
             r["request_time"] = r["request_time"].isoformat()
@@ -444,6 +444,108 @@ def test_checkpoint_recovery_no_duplicates(spark, tmp_path):
 
     ids = sorted(r["network_user_id"] for r in good.rows)
     assert ids == ["u-0", "u-1", "u-10", "u-11", "u-12", "u-2"], ids
+
+
+def _mixed_requests(first: int) -> list[dict]:
+    """One landing file of the full request mix, ids from ``first``:
+    pixel, tp2, an oversized tp2 whose split leaves one unsplittable
+    element, Segment, Amplitude fan-out and an invalid querystring."""
+    from .fixtures import (
+        AMPLITUDE_BATCH_BODY,
+        SEGMENT_PAGE_BODY,
+        TRACKER_BATCH_BODY,
+        _req,
+    )
+
+    els = [{"e": "pv", "n": i, "pad": "p" * 60} for i in range(12)]
+    els.append({"e": "pv", "n": 12, "pad": "u" * 1200})  # never fits alone
+    oversized = json.dumps(
+        {"schema": "iglu:com.snowplowanalytics.snowplow/payload_data/jsonschema/1-0-4", "data": els},
+        separators=(",", ":"),
+    )
+    post = dict(method="POST", querystring=None, content_type="application/json")
+    return [
+        _req(first, cookies={}, querystring="e=pv"),
+        _req(first + 1, path="/com.snowplowanalytics.snowplow/tp2", body=TRACKER_BATCH_BODY, **post),
+        _req(first + 2, path="/com.snowplowanalytics.snowplow/tp2", body=oversized, **post),
+        _req(first + 3, path="/com.segment/v1/p", body=SEGMENT_PAGE_BODY,
+             **{**post, "content_type": "text/plain"}),
+        _req(first + 4, path="/com.amplitude/2/httpapi", body=AMPLITUDE_BATCH_BODY, **post),
+        _req(first + 5, querystring="bad=%zz"),
+        _req(first + 6, querystring="e=pv&huge=" + "x" * 2000),  # oversized GET
+    ]
+
+
+def _canonical(rows) -> list[str]:
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in rows)
+
+
+def test_streaming_matches_batch_pipeline(spark, tmp_path):
+    """The dataflow the streaming query plans once (``route`` on the
+    source, ``run`` per micro-batch) writes exactly the rows the batch
+    pipeline ``run(route(raw))`` produces over the same landing files,
+    row for row, across several micro-batches."""
+    from opensnowcat_collector_spark import pipeline
+    from opensnowcat_collector_spark.schema import RAW_REQUEST_SCHEMA
+
+    landing = str(tmp_path / "landing")
+    for b in range(3):
+        _write_landing(landing, _mixed_requests(100 * b), name=f"batch{b}.json")
+    cfg = CollectorConfig(
+        deterministic_now_ms=1705320000000,
+        good_sink=SinkConfig(max_bytes=1500),  # only the padded tp2 and GET exceed it
+        enable_analyticsjs_bridge=True,
+        enable_amplitude_bridge=True,
+    )
+    good, bad = MemorySink(), MemorySink()
+    job = StreamingCollector(spark, cfg, good, bad)
+    q = job.start(
+        job.source_from_files(landing, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert len(good.batches) == 3 and len(bad.batches) == 3
+
+    raw = spark.read.schema(RAW_REQUEST_SCHEMA).json(landing)
+    res = pipeline.run(pipeline.route(raw, cfg), cfg)
+    want_good, want_bad = res.good.collect(), res.bad.collect()
+    # every branch of the mix is present, so the comparison covers it
+    assert max(r["split_index"] for r in want_good) > 0
+    assert {b["kind"] for b in want_bad} == {"size_violation", "generic_error"}
+    assert sum(r["request_id"] == "req-0004" for r in want_good) == 2
+    assert _canonical(good.rows) == _canonical(want_good)
+    assert _canonical(bad.rows) == _canonical(want_bad)
+
+
+def test_streaming_generated_ids_unique_across_batches(spark, tmp_path):
+    """Production config (``deterministic_now_ms`` unset): the streaming
+    plan is built once, yet the generated ``partition_key`` and cookieless
+    ``network_user_id`` UUIDs must never repeat across micro-batches."""
+    from .fixtures import _req
+
+    landing = str(tmp_path / "landing")
+    n_files, per_file = 4, 5
+    for b in range(n_files):
+        rows = [_req(100 * b + i, cookies={}, querystring="e=pv") for i in range(per_file)]
+        _write_landing(landing, rows, name=f"batch{b}.json")
+    cfg = CollectorConfig()
+    good, bad = MemorySink(), MemorySink()
+    job = StreamingCollector(spark, cfg, good, bad)
+    q = job.start(
+        job.source_from_files(landing, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert len(good.batches) == n_files
+    rows = good.rows
+    assert len(rows) == n_files * per_file
+    for col in ("partition_key", "network_user_id"):
+        values = [r[col] for r in rows]
+        assert len(set(values)) == len(values), col
 
 
 def test_streaming_document_curation(spark, tmp_path):
