@@ -869,10 +869,9 @@ def semdedup_out_schema():
 
 
 def _semdedup_cell_kernel(cmap, tau: float = SEMDEDUP_TAU):
-    """The per-cell epsilon-ball kernel of ``dedup_semdedup``, module-level
-    so the width-scaling probe (``tools/semdedup_width_probe.py``) times
-    EXACTLY the operator's code path under a K-proportional-to-corpus
-    quantizer (VERDICT r10 item 3) — one definition, no probe drift."""
+    """The per-cell epsilon-ball kernel of ``dedup_semdedup``.  Its
+    scaling under a K-proportional-to-corpus quantizer is recorded in
+    BASELINE.md, "r11 probe rows" ("SemDeDup cluster-count knob")."""
     import numpy as np
     import pandas as pd
 

@@ -2073,11 +2073,10 @@ def streaming_kn_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kn_score_frame(t: dict, cc: DataFrame, batch_df: DataFrame) -> DataFrame:
-    """The serving twin's per-batch scoring frame, module-level so the
-    fixed-batch scale probe (tools/kn_fixed_batch_probe.py, VERDICT r12
-    item 7) times EXACTLY the dataflow the gate runs — the full
-    interpolated modified-KN backoff tree over the trained tables
-    ``t`` + the 1-row discount broadcast ``cc``."""
+    """The serving twin's per-batch scoring frame: the full interpolated
+    modified-KN backoff tree over the trained tables ``t`` + the 1-row
+    discount broadcast ``cc``.  Its fixed-batch scaling is recorded in
+    BASELINE.md, "r13 probe rows" ("KN serving at FIXED batch size")."""
     from .llmdata.text import flat_trigrams
 
     ws = batch_df.select(

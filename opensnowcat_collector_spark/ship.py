@@ -18,7 +18,7 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-_SHIPPED: set[int] = set()
+_SHIPPED: set[str] = set()
 
 
 def ensure_shipped(spark: SparkSession) -> None:
@@ -35,7 +35,10 @@ def ensure_shipped(spark: SparkSession) -> None:
     if spark.conf.get("spark.sql.parser.escapedStringLiterals", "false") != "false":
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     sc = spark.sparkContext
-    key = id(sc)
+    # Keyed on the application id, not id(sc): CPython reuses an object's
+    # id once it is freed, so a context created after sc.stop() could
+    # otherwise look already shipped.
+    key = sc.applicationId
     if key in _SHIPPED:
         return
     _SHIPPED.add(key)

@@ -290,7 +290,7 @@ def test_ensure_shipped_pins_parser_escape_mode(spark):
 
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
-        ship._SHIPPED.discard(id(spark.sparkContext))
+        ship._SHIPPED.discard(spark.sparkContext.applicationId)
         ship.ensure_shipped(spark)
         assert (
             spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
@@ -310,3 +310,44 @@ def test_ensure_shipped_pins_every_session(spark):
     other.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     ship.ensure_shipped(other)
     assert other.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+
+
+def test_ensure_shipped_survives_recycled_context_id(monkeypatch):
+    """A context created after ``sc.stop()`` can land on the freed
+    context's ``id``; it is a new application and must be shipped."""
+    from opensnowcat_collector_spark import ship
+
+    class Conf:
+        def get(self, key, default=None):
+            return default
+
+    class Context:
+        def __init__(self, app_id):
+            self.applicationId = app_id
+            self.shipped = []
+
+        def addPyFile(self, path):
+            self.shipped.append(path)
+
+    class Session:
+        def __init__(self, sc):
+            self.conf = Conf()
+            self.sparkContext = sc
+
+    monkeypatch.setattr(ship.shutil, "make_archive", lambda *a, **k: "pkg.zip")
+    a = Context("stub-app-a")
+    ship.ensure_shipped(Session(a))
+    assert a.shipped == ["pkg.zip"]
+    id_a = id(a)
+    # allocate everything the loop needs before freeing a's slot
+    app_ids = [f"stub-app-b{i}" for i in range(10_000)]
+    held = []  # keep misses alive so each try takes a fresh slot
+    del a
+    for app_id in app_ids:
+        b = Context(app_id)
+        if id(b) == id_a:
+            break
+        held.append(b)
+    assert id(b) == id_a, "no new context reused the freed id"
+    ship.ensure_shipped(Session(b))
+    assert b.shipped == ["pkg.zip"]

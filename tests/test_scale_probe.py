@@ -1,90 +1,12 @@
-"""Docs must not drift from the registry (judge VERDICT r7 items 4/5:
-COVERAGE.md said 158 queries while the registry held 163 — the gate map
-is now DERIVED by tools/gen_gate_map.py and this test fails the suite if
-the committed text differs from a fresh derivation)."""
+"""Pins of ``tools/scale_probe.py``'s replica generator: the text
+transforms that build K-fold replica corpora must never alias one
+replica's vocabulary onto another's (BASELINE.md r9 section)."""
 
 from __future__ import annotations
 
 import os
-import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_coverage_gate_map_matches_registry():
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from gen_gate_map import BEGIN, gate_map_lines
-
-    src = open(os.path.join(REPO, "COVERAGE.md")).read()
-    committed = src[src.index(BEGIN) :].rstrip("\n")
-    derived = "\n".join(gate_map_lines()).rstrip("\n")
-    assert committed == derived, (
-        "COVERAGE.md gate map drifted from the registry — "
-        "run: python tools/gen_gate_map.py"
-    )
-
-
-def test_coverage_header_count_matches_registry():
-    from opensnowcat_collector_spark.engine import registry
-
-    src = open(os.path.join(REPO, "COVERAGE.md")).read()
-    m = re.search(r"oracle_sql\(\)`; (\d+) entries", src)
-    assert m, "COVERAGE.md header count sentence missing"
-    assert int(m.group(1)) == len(registry._PRIORITY)
-
-
-def test_readme_registry_count_matches():
-    from opensnowcat_collector_spark.engine import registry
-
-    src = open(os.path.join(REPO, "README.md")).read()
-    m = re.search(r"# (\d+) registered", src)
-    assert m, "README.md registry count comment missing"
-    assert int(m.group(1)) == len(registry._PRIORITY)
-
-
-def test_rotation_keeps_evidence_fresh():
-    """Rotation discipline, self-enforcing (VERDICT r7 item 3 set the bar
-    'max evidence age <= 6 rounds'): every registered query must either
-    sit in the CURRENT graded window (fresh evidence arrives this round)
-    or have a fully-green driver row within the last 6 grading rounds.
-    When this fails, the fix is a deliberate _PRIORITY rotation, never a
-    threshold bump — with a 50-slot window over the full registry a
-    complete refresh cycle fits comfortably inside the budget.
-
-    Evidence comes from the git-TRACKED artifacts only (VERDICT r10
-    item 1): the driver drops the in-flight round's CORRECTNESS file
-    after the builder's last commit, and an untracked artifact must not
-    redden a commit that was consistent when made."""
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from gen_gate_map import _driver_green, tracked_correctness_paths
-
-    from opensnowcat_collector_spark.engine import registry
-
-    rounds = [
-        int(re.search(r"CORRECTNESS_r0*(\d+)\.json$", p).group(1))
-        for p in tracked_correctness_paths()
-    ]
-    current_round = max(rounds) + 1  # artifacts exist for completed rounds
-    green, gen_round = _driver_green()
-    # the generator derives the same in-flight round; keep them locked
-    assert gen_round == current_round
-    window = set(registry._PRIORITY[: registry.GRADED_WINDOW])
-    stale = {}
-    for name in registry._PRIORITY:
-        if name in window:
-            continue
-        # labels are "rN" or "rN^" (rows-only); both count as evidence
-        last = max((int(r[1:].rstrip("^")) for r in green.get(name, [])), default=None)
-        if last is None or current_round - last > 6:
-            stale[name] = last
-    assert stale == {}, (
-        f"queries with driver evidence older than 6 rounds and not "
-        f"re-windowed (rotate them into registry._PRIORITY's window): {stale}"
-    )
 
 
 def test_scale_probe_replica_maps_never_alias():

@@ -12,7 +12,7 @@ Replication preserves semantics instead of inflating join fan-out:
   312 distinct maps), so cross-replica MULTI-LETTER words never collide
   through K=311 (no artificial N^2 near-dup pairs).  The exact residual
   is pinned empirically over the real corpus vocabulary in
-  tests/test_docs_consistency.py::
+  tests/test_scale_probe.py::
   test_scale_probe_replica_vocab_collisions_bounded_and_harmless: the
   single-letter word 'a' still aliases across same-offset replicas
   (structural for ANY letter bijection once K>26 — pigeonhole on one
