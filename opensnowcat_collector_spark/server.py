@@ -12,6 +12,21 @@ in plain Python — the duplication is intentional and confined to this
 file (SURVEY §7 risk register: HTTP response semantics are
 request-scoped and can't live in Spark).
 
+Serving model (:class:`ReusedWorkerHTTPServer`, both listeners):
+
+- each accepted connection runs on a worker thread that is reused for
+  later connections, as the reference's dispatcher reuses its threads; a
+  new worker starts only when none is idle, so a stalled connection never
+  delays a request on another one, and a worker idle for
+  ``WORKER_IDLE_S`` exits;
+- the event handler parses its request target once, and its buffered
+  ``wfile`` sends the status line, headers and body of each response in
+  one write, flushed when the response is complete;
+- ``CollectorServer.stop`` closes the listener, waits up to
+  ``termination_deadline_ms`` for the requests in progress, then
+  publishes the last landing file.  A request that arrives at the writer
+  after that answers 503, so every 2xx row is published.
+
 stdlib-only (http.server) — suitable as a test rig and a shape-reference
 for a production receiver (nginx/lambda/anything that can append JSON
 rows to the landing zone or a Kafka topic).
@@ -22,13 +37,14 @@ from __future__ import annotations
 import base64
 import json
 import os
+import queue
 import re
 import threading
 import time
 import uuid
 from datetime import datetime, timezone
 from http.cookies import SimpleCookie
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qsl, urlencode, urlsplit
 
 from .config import EVENT_PATH_RE, ZERO_UUID, CollectorConfig
@@ -38,6 +54,9 @@ from .transforms.privacy import _URL_HOST_RE
 PIXEL_GIF = base64.b64decode(PIXEL_GIF_BASE64)
 _EVENT_PATH_RE = re.compile(EVENT_PATH_RE)
 _OPS_PATHS = {"/health", "/sink-health", "/crossdomain.xml", "/robots.txt", "/"}
+#: seconds an idle worker waits for its next connection before it exits:
+#: a steady load keeps reusing its workers, a burst's extras are gone soon
+WORKER_IDLE_S = 5.0
 
 
 def parse_content_length(value) -> int | None:
@@ -62,6 +81,11 @@ def render_crossdomain_xml(cfg: CollectorConfig) -> str:
         for d in cfg.cross_domain.domains
     )
     return f'<?xml version="1.0"?>\n<cross-domain-policy>\n{lines}\n</cross-domain-policy>'
+
+
+class WriterClosedError(RuntimeError):
+    """``LandingWriter.append`` after ``close``: the row would never be
+    published, so it must not be acknowledged either."""
 
 
 class LandingWriter:
@@ -129,6 +153,10 @@ class LandingWriter:
 
     def append(self, row: dict) -> None:
         with self._lock:
+            # checked under the lock: an append that passes it finishes
+            # before close() publishes the last file
+            if self._stop.is_set():
+                raise WriterClosedError("landing writer is closed")
             if self._fh is None:
                 self._open()
             self._fh.write(json.dumps(row) + "\n")
@@ -158,6 +186,9 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
 
     class Handler(BaseHTTPRequestHandler):
         server_version = f"{cfg.app_name}/{cfg.app_version}"
+        # buffered: a response's headers and body leave in one send when
+        # handle_one_request flushes after the do_* method returns
+        wbufsize = -1
 
         def log_message(self, fmt, *args):  # quiet
             pass
@@ -168,8 +199,7 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
             c.load(self.headers.get("Cookie", ""))
             return {k: m.value for k, m in c.items()}
 
-        def _raw_row(self, method: str, body: str | None) -> dict:
-            split = urlsplit(self.path)
+        def _raw_row(self, method: str, body: str | None, split) -> dict:
             headers = [f"{k}: {v}" for k, v in self.headers.items()]
             return {
                 "request_id": str(uuid.uuid4()),
@@ -191,14 +221,13 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
                 "request_time": datetime.now(timezone.utc).isoformat(),
             }
 
-        def _nuid_opt(self, row: dict) -> str | None:
+        def _nuid_opt(self, row: dict, qs_params: dict) -> str | None:
             # T1 semantics (CollectorService.scala:133-141,539-547): the
             # *optional* nuid — None means no anonymous header, no qs
             # param, no cookie (the cookie-bounce trigger).
             if row["sp_anonymous"] is not None:
                 return ZERO_UUID
-            qs = dict(parse_qsl(row["querystring"] or "", keep_blank_values=True))
-            return qs.get("nuid") or row["cookies"].get(cfg.cookie.name)
+            return qs_params.get("nuid") or row["cookies"].get(cfg.cookie.name)
 
         def _bounce_location(self, split, qs_params: dict) -> str:
             # CollectorService.scala:437-464: redirect to self with the
@@ -269,13 +298,13 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
                 self.close_connection = True
                 return self._respond(400, b"bad content-length", "text/plain")
             body = self.rfile.read(length).decode("utf-8") if length else None
-            row = self._raw_row(method, body)
-            qs_params = dict(parse_qsl(split.query or "", keep_blank_values=True))
+            row = self._raw_row(method, body, split)
+            qs_params = dict(parse_qsl(split.query, keep_blank_values=True))
             # F2 receiver half (CollectorService.scala:127-161): bounce a
             # cookie-less pixel request back to itself with the n3pc
             # marker; the bounced request resolves the fallback nuid.
             bouncing = cfg.cookie_bounce.name in qs_params
-            nuid_opt = self._nuid_opt(row)
+            nuid_opt = self._nuid_opt(row, qs_params)
             bounce = (
                 cfg.cookie_bounce.enabled
                 and nuid_opt is None
@@ -291,7 +320,12 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
                 nuid = str(uuid.uuid4())
             dnt = self._do_not_track(row)
             if not dnt and not bounce:  # F1/F2: not stored, response still sent
-                writer.append(row)
+                try:
+                    writer.append(row)
+                except WriterClosedError:
+                    # past the shutdown drain: the row will not land, so
+                    # it must not be acknowledged
+                    return self._respond(503, b"shutting down", "text/plain")
             extra = []
             sc = self._set_cookie_header(row, nuid)
             if sc:
@@ -308,8 +342,7 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
                 )
             if path.startswith("/r/"):
                 # F4/T6 redirect (allowlist + macro)
-                qs = dict(parse_qsl(split.query or "", keep_blank_values=True))
-                target = qs.get("u")
+                target = qs_params.get("u")
                 # Mirrors the reference (CollectorService.scala:391-398)
                 # and transforms/privacy.redirect_allowed exactly: an
                 # EMPTY allowlist returns true before the URL is parsed;
@@ -406,8 +439,106 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
     return Handler
 
 
+class ReusedWorkerHTTPServer(HTTPServer):
+    """``HTTPServer`` whose connections run on reused daemon worker threads.
+
+    The serve loop hands each accepted connection to the most recently
+    idled worker and starts a new one only when no worker is idle.  As
+    with a thread per connection, a stalled connection holds only its own
+    worker, so it never delays a request on another connection; unlike
+    it, a steady load starts no thread per connection.  Handing out the
+    most recent idler first lets the surplus of a burst sit out
+    ``WORKER_IDLE_S`` and exit.  ``workers`` counts the live workers."""
+
+    def __init__(self, *args, **kwargs):
+        self._pool_lock = threading.Lock()
+        self._drained = threading.Condition(self._pool_lock)
+        self._idle: list[queue.SimpleQueue] = []  # one inbox per idle worker
+        self._in_flight = 0
+        self._closed = False
+        self.workers = 0
+        super().__init__(*args, **kwargs)
+
+    def process_request(self, request, client_address):
+        with self._pool_lock:
+            self._in_flight += 1
+            inbox = self._idle.pop() if self._idle else None
+            if inbox is None:
+                self.workers += 1
+        if inbox is not None:
+            inbox.put((request, client_address))
+            return
+        try:
+            threading.Thread(
+                target=self._work, args=(request, client_address), daemon=True
+            ).start()
+        except RuntimeError:  # no thread: the serve loop reports and closes
+            with self._pool_lock:
+                self.workers -= 1
+                self._finished_locked()
+            raise
+
+    def _finished_locked(self) -> None:
+        self._in_flight -= 1
+        if not self._in_flight:
+            self._drained.notify_all()
+
+    def _work(self, request, client_address) -> None:
+        inbox: queue.SimpleQueue = queue.SimpleQueue()
+        while True:
+            try:
+                self.finish_request(request, client_address)
+            except Exception:
+                self.handle_error(request, client_address)
+            finally:
+                self.shutdown_request(request)
+            with self._pool_lock:
+                self._finished_locked()
+                if self._closed:
+                    self.workers -= 1
+                    return
+                self._idle.append(inbox)
+            try:
+                job = inbox.get(timeout=WORKER_IDLE_S)
+            except queue.Empty:
+                with self._pool_lock:
+                    if inbox in self._idle:
+                        self._idle.remove(inbox)
+                        self.workers -= 1
+                        return
+                # handed a connection as the wait ran out
+                job = inbox.get()
+            if job is None:  # server closed
+                return
+            request, client_address = job
+
+    def wait_drained(self, timeout: float) -> bool:
+        """Wait up to ``timeout`` seconds for every connection in progress
+        to finish; whether they all did."""
+        with self._drained:
+            return self._drained.wait_for(lambda: not self._in_flight, timeout)
+
+    def server_close(self) -> None:
+        """Close the listener and end the idle workers; busy workers end
+        when their connection does."""
+        super().server_close()
+        with self._pool_lock:
+            self._closed = True
+            idle, self._idle = self._idle, []
+            self.workers -= len(idle)
+        for inbox in idle:
+            inbox.put(None)
+
+
 class CollectorServer:
-    """ThreadingHTTPServer wrapper with a background serve loop.
+    """The event listener: a background serve loop of
+    :class:`ReusedWorkerHTTPServer`, whose reused worker threads run the
+    event handler, one connection at a time each.  The handler answers
+    each request in one buffered write.  ``stop`` drains: it closes the
+    listener, waits up to ``cfg.termination_deadline_ms`` for the requests
+    in progress, then closes the :class:`LandingWriter`, which publishes
+    the last landing file; a request that reaches the writer after that
+    answers 503, so no acknowledged row is left unpublished.
 
     When ``cfg.ssl.enable`` the listener socket itself is wrapped in TLS
     (reference.conf:38-42 / model.scala SSLConfig: the reference binds
@@ -426,7 +557,8 @@ class CollectorServer:
                  ssl_keyfile: str | None = None):
         self.writer = LandingWriter(landing_dir)
         self.sinks = tuple(sinks)
-        self.httpd = ThreadingHTTPServer(
+        self._drain_deadline_s = cfg.termination_deadline_ms / 1000.0
+        self.httpd = ReusedWorkerHTTPServer(
             (host, port), make_handler(cfg, self.writer, self.sinks)
         )
         if cfg.ssl.enable:
@@ -445,7 +577,7 @@ class CollectorServer:
                 # would run inside accept() in the single serve_forever
                 # thread, so one stalled peer (slow-loris) wedges the whole
                 # listener.  Deferred, the handshake happens lazily on the
-                # first read — inside the per-connection handler THREAD —
+                # first read — on the connection's worker thread —
                 # and the handler timeout below bounds it.
                 self.httpd.socket = ctx.wrap_socket(
                     self.httpd.socket,
@@ -458,7 +590,7 @@ class CollectorServer:
 
                 # Deferring the handshake moves failures (plain-HTTP
                 # probes, port scanners, LB TCP health checks) from the
-                # silently-dropped accept() path into the handler thread,
+                # silently-dropped accept() path into the worker thread,
                 # where the default handle_error prints a traceback per
                 # connection.  Drop TLS/connection noise; keep real errors.
                 def _handle_error(request, client_address,
@@ -489,15 +621,16 @@ class CollectorServer:
     def stop(self, drain_wait_s: float | None = None) -> None:
         """Graceful shutdown: optionally mark /health unhealthy and keep
         serving for the pre-termination period (reference
-        preTerminationPeriod/preTerminationUnhealthy) before closing the
-        listener and publishing the last landing file."""
+        preTerminationPeriod/preTerminationUnhealthy), close the
+        listener, wait up to ``termination_deadline_ms`` for the requests
+        in progress, then publish the last landing file.  A request still
+        running after the deadline answers 503 instead of a 2xx."""
         self.httpd.draining = True
         if drain_wait_s:
-            import time as _time
-
-            _time.sleep(drain_wait_s)
+            time.sleep(drain_wait_s)
         self.httpd.shutdown()
         self.httpd.server_close()
+        self.httpd.wait_drained(self._drain_deadline_s)
         self.writer.close()
 
 
@@ -549,7 +682,7 @@ class SslRedirectServer:
             def log_message(self, fmt, *args):  # quiet test servers
                 pass
 
-        self.httpd = ThreadingHTTPServer((host, port), _Redirect)
+        self.httpd = ReusedWorkerHTTPServer((host, port), _Redirect)
         self.port = self.httpd.server_address[1]
         self._thread: threading.Thread | None = None
 

@@ -588,3 +588,94 @@ def test_malformed_content_length_collector_400(server):
     resp = conn.getresponse()
     assert resp.status == 400
     conn.close()
+
+
+@pytest.mark.parametrize(
+    "deadline_ms, status, landed", [(10000, b"200", 1), (100, b"503", 0)]
+)
+def test_stop_drains_in_flight_request(tmp_path, deadline_ms, status, landed):
+    """A request whose body arrives after stop() began is either drained
+    (answered 2xx and published by the writer's close) or, past
+    ``termination_deadline_ms``, answered 503 and not stored: a 2xx row is
+    never left behind in the staging directory."""
+    import os
+    import socket
+    import threading
+
+    srv = CollectorServer(
+        CollectorConfig(termination_deadline_ms=deadline_ms),
+        str(tmp_path / "landing"),
+    )
+    # set once the handler has parsed the headers: the request is in flight
+    parsed = threading.Event()
+    handler = srv.httpd.RequestHandlerClass
+    parse_request = handler.parse_request
+
+    def tracked(self):
+        ok = parse_request(self)
+        parsed.set()
+        return ok
+
+    handler.parse_request = tracked
+    srv.start()
+    body = b"e=pv&p=web&tv=js"
+    sock = socket.create_connection(("127.0.0.1", srv.port), timeout=10)
+    sock.sendall(
+        b"POST /com.snowplowanalytics.snowplow/tp2 HTTP/1.0\r\n"
+        b"Content-Type: application/x-www-form-urlencoded\r\n"
+        b"Content-Length: %d\r\n\r\n" % len(body)
+    )
+    assert parsed.wait(10)
+    stopper = threading.Thread(target=srv.stop)
+    stopper.start()
+    # long enough for stop() to close the listener and, with the short
+    # deadline, the writer
+    stopper.join(1.0)
+    sock.sendall(body)
+    with sock, sock.makefile("rb") as fh:
+        assert fh.readline().split()[1] == status
+    stopper.join(15)
+    assert not stopper.is_alive()
+    rows = [
+        json.loads(line)
+        for f in (tmp_path / "landing").glob("*.json")
+        for line in f.read_text().splitlines()
+    ]
+    assert [r["body"] for r in rows] == [body.decode()] * landed
+    assert os.listdir(srv.writer.staging_dir) == []
+
+
+def test_stalled_connections_do_not_delay_others(tmp_path, monkeypatch):
+    """More silent connections than any default fixed pool holds: a new
+    pixel request is still answered at once, since a worker starts when
+    none is idle; once the silent sockets close, the idle workers exit."""
+    import os
+    import socket
+    import time
+
+    from opensnowcat_collector_spark import server as server_mod
+
+    monkeypatch.setattr(server_mod, "WORKER_IDLE_S", 0.2)
+    srv = CollectorServer(CollectorConfig(), str(tmp_path / "landing"))
+    srv.start()
+    silent = []
+    try:
+        for _ in range(2 * ((os.cpu_count() or 1) + 4)):
+            silent.append(socket.create_connection(("127.0.0.1", srv.port), timeout=10))
+        t0 = time.monotonic()
+        with _get(f"http://127.0.0.1:{srv.port}/i?e=pv", headers={"Cookie": "sp=u-1"}) as resp:
+            assert resp.status == 200
+            resp.read()
+        assert time.monotonic() - t0 < 2.0
+        assert srv.httpd.workers == len(silent) + 1
+        for sock in silent:
+            sock.close()
+        silent = []
+        deadline = time.monotonic() + 10
+        while srv.httpd.workers and time.monotonic() < deadline:
+            time.sleep(0.05)
+        assert srv.httpd.workers == 0
+    finally:
+        for sock in silent:
+            sock.close()
+        srv.stop()
