@@ -61,9 +61,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    cfg: CollectorConfig = (
-        load_collector_config(args.config) if args.config else CollectorConfig()
-    )
+    cfg: CollectorConfig = load_collector_config(args.config)
     landing = args.landing or tempfile.mkdtemp(prefix="collector-landing-")
     checkpoint = args.checkpoint or tempfile.mkdtemp(prefix="collector-ckpt-")
     good_name, bad_name = _stream_names(args.config)

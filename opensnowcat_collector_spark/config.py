@@ -165,11 +165,6 @@ class SinkConfig:
     max_bytes: int = 1000000000  # stdout default, config.stdout.extended.hocon:190
     buffer: BufferConfig = field(default_factory=BufferConfig)
     options: dict = field(default_factory=dict)
-    #: how payload bytes are counted against max_bytes for split routing:
-    #: "thrift" = serialized-Thrift size (reference parity,
-    #: SplitBatch.scala:84-99) or "json" = canonical compact-JSON UTF-8
-    #: size (for sinks that ship the JSON serialization as the record).
-    size_accounting: str = "thrift"
 
 
 @dataclass(frozen=True)

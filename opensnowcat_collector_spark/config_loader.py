@@ -311,13 +311,12 @@ def _sink_config(tree: dict, base: SinkConfig) -> SinkConfig:
         record_limit=int(buf.get("recordLimit", base.buffer.record_limit)),
         time_limit_ms=parse_duration_ms(buf.get("timeLimit", base.buffer.time_limit_ms)),
     )
-    known = {"enabled", "maxBytes", "sizeAccounting"}
+    known = {"enabled", "maxBytes"}
     return SinkConfig(
         kind=str(sink.get("enabled", base.kind)),
         max_bytes=int(sink.get("maxBytes", base.max_bytes)),
         buffer=buffer,
         options={k: v for k, v in sink.items() if k not in known},
-        size_accounting=str(sink.get("sizeAccounting", base.size_accounting)),
     )
 
 
@@ -445,13 +444,13 @@ def load_collector_config(
     base: CollectorConfig | None = None,
 ) -> CollectorConfig:
     """Load a HOCON (or JSON — it's a HOCON subset) collector config file,
-    merged over REFERENCE_DEFAULTS, validated, mapped to dataclasses."""
-    if text is None:
-        if path is None:
-            raise ValueError("need path or text")
+    merged over REFERENCE_DEFAULTS, validated, mapped to dataclasses.
+    With neither ``path`` nor ``text`` the result is REFERENCE_DEFAULTS
+    alone."""
+    if text is None and path is not None:
         with open(path, encoding="utf-8") as f:
             text = f.read()
-    user = parse_hocon(text)
+    user = parse_hocon(text) if text is not None else {}
     # Reference config files wrap everything in `collector { ... }` (with
     # akka/pekko sibling blocks we have no use for) — descend like the
     # reference's `namespace = "collector"` pureconfig source.

@@ -36,9 +36,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..relational import register
-from ..tables import artifact, table
+from ..tables import artifact, artifact_path, build_once, table
 from .dedup import exploded_shingles
-from .text import bigram_stream_sql, flat_bigrams
+from .text import _DOCUMENTS, bigram_stream_sql, flat_bigrams
 
 # Stratified sampling: md5(doc_id) is uniform on [0, 16^32); comparing the
 # hex string against a one-hex-digit prefix keeps a 1/16-granular slice.
@@ -1502,19 +1502,6 @@ def qc_train(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_classifier_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from .similarity import _source_fingerprint
-
-    key = hashlib.md5(
-        f"qclf:v1:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_quality_clf", key)
-
-
 def build_quality_classifier(spark: SparkSession, sf_dir: str) -> str:
     """Train the quality classifier ONCE and persist the weight table —
     the pay-once artifact pattern of ``build_unigram_lm`` applied to the
@@ -1522,21 +1509,15 @@ def build_quality_classifier(spark: SparkSession, sf_dir: str) -> str:
     10-step GD chain inside every call).  Layout under the
     fingerprint-keyed path: ``weights/`` = (b, wt) parquet, UNROUNDED
     doubles so the scoring sigmoid is bit-identical to training the
-    chain inline (parquet round-trips IEEE doubles exactly); atomic
-    publish, stale-data guard via the source fingerprint."""
+    chain inline (parquet round-trips IEEE doubles exactly); published
+    by ``tables.build_once`` under the documents fingerprint."""
     import os
 
-    from .similarity import _publish_index
-
-    path = quality_classifier_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         w = qc_train(table(spark, sf_dir, "documents"))
-        tmp = f"{path}.build-{os.getpid()}"
         w.write.mode("overwrite").parquet(os.path.join(tmp, "weights"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(artifact_path("quality_clf", sf_dir, _DOCUMENTS, salt="qclf:v1"), write)
 
 
 def qc_trained_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2307,19 +2288,6 @@ def _doremi_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doremi_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from .similarity import _source_fingerprint
-
-    key = hashlib.md5(
-        f"doremi:v1:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_doremi", key)
-
-
 def build_doremi(spark: SparkSession, sf_dir: str) -> str:
     """Run the Group-DRO mixture optimization ONCE and persist the
     round-averaged weights — the pay-once artifact pattern of
@@ -2327,20 +2295,15 @@ def build_doremi(spark: SparkSession, sf_dir: str) -> str:
     chain previously re-ran inside every call; production trains the
     mixture once per corpus snapshot and samplers consume the table).
     Layout: ``mixture/`` = (source, mix_weight) parquet, the graded
-    6-dp output itself; atomic publish, fingerprint stale-data guard."""
+    6-dp output itself; published by ``tables.build_once`` under the
+    documents fingerprint."""
     import os
 
-    from .similarity import _publish_index
-
-    path = doremi_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         w = _doremi_train(spark, sf_dir)
-        tmp = f"{path}.build-{os.getpid()}"
         w.write.mode("overwrite").parquet(os.path.join(tmp, "mixture"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(artifact_path("doremi", sf_dir, _DOCUMENTS, salt="doremi:v1"), write)
 
 
 @register("curate_doremi_weights", oracle=_doremi_oracle())

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..relational import register
-from ..tables import artifact, table
+from ..tables import artifact, artifact_path, build_once, table
 
 DIM = 64
 N_PLANES = 8
@@ -188,54 +188,16 @@ def sketch_udf():
 # the table hive-partitioned by bucket; each probe afterwards filters on
 # the partition column, so the scan reads ONLY the probed bucket
 # directories (``PartitionFilters`` in the plan — asserted by
-# tools/plan_audit.py and tests/test_layout.py) instead of the full table.
+# tests/test_layout.py and tests/test_plan_shapes.py) instead of the full table.
 # This is the 100 TB path: probe cost is O(bucket), not O(N).
 # ---------------------------------------------------------------------------
 
 
-def _source_fingerprint(sf_dir: str, name: str = "embeddings.parquet") -> str:
-    """mtime+size fingerprint of the source parquet: regenerated testdata
-    at the same path gets a different cache key, so a stale index can
-    never be served against fresh data.
-
-    When the source is a Spark-written DIRECTORY the fingerprint walks
-    the tree and folds every file's (relpath, mtime_ns, size) — judge
-    ADVICE r12: rewriting part files in place with identical names and
-    sizes can leave the top-level directory stat unchanged, which would
-    serve a stale artifact (KN count tables, ANN index) over fresh
-    data.  Single-file sources keep the cheap one-stat path."""
-    root = os.path.join(sf_dir, name)
-    st = os.stat(root)
-    if not os.path.isdir(root):
-        return f"{st.st_mtime_ns}-{st.st_size}"
-    parts: list[str] = []
-    for dirpath, dirnames, filenames in os.walk(root):
-        dirnames.sort()
-        for fn in sorted(filenames):
-            fst = os.stat(os.path.join(dirpath, fn))
-            rel = os.path.relpath(os.path.join(dirpath, fn), root)
-            parts.append(f"{rel}:{fst.st_mtime_ns}:{fst.st_size}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
+_EMBEDDINGS = ("embeddings.parquet",)
 
 
 def ann_index_path(sf_dir: str) -> str:
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{_source_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_ann_index", key)
-
-
-def _publish_index(tmp: str, path: str) -> None:
-    """Atomically publish a freshly-built index directory: rename into
-    place; if a concurrent builder won the race (dest now exists with its
-    ``_SUCCESS`` marker), keep theirs and discard ours — both builds are
-    deterministic-identical.  Any OTHER rename failure (EXDEV, EACCES,
-    ENOENT on a missing parent...) re-raises: swallowing it would discard
-    the build and surface later as a confusing path-not-found instead of
-    the real cause (same discipline as layout.build_bucketed_layout)."""
-    from ..layout import publish_atomic
-
-    publish_atomic(tmp, path, "_SUCCESS")
+    return artifact_path("ann_index", sf_dir, _EMBEDDINGS)
 
 
 def build_ann_index(
@@ -250,13 +212,10 @@ def build_ann_index(
     pay-once analogue of layout.write_bucketed for this access path.
     The default path embeds the source parquet's mtime+size fingerprint
     (stale-cache guard), and the build lands in a temp dir published by
-    atomic rename (concurrent first-builds cannot corrupt each other)."""
-    import shutil
+    ``tables.build_once`` (concurrent first-builds cannot corrupt each
+    other)."""
 
-    path = path or ann_index_path(sf_dir)
-    if force:
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         e = table(spark, sf_dir, "embeddings")
         sk = e.select(
             "vec_id",
@@ -264,7 +223,6 @@ def build_ann_index(
             "embedding",
             sketch_udf()(F.col("embedding")).alias("sketch"),
         ).withColumn("bucket", F.concat(F.lit("b"), F.col("sketch")))
-        tmp = f"{path}.build-{os.getpid()}"
         # cluster by bucket before the partitioned write: without it every
         # scan task that held rows of a bucket wrote its own file (up to
         # tasks x buckets fragments — measured 2k+ tiny files at sf0.1,
@@ -275,8 +233,8 @@ def build_ann_index(
         sk.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
             "bucket"
         ).parquet(tmp)
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(path or ann_index_path(sf_dir), write, rebuild=force)
 
 
 def query_sketch(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> tuple[str, list]:
@@ -363,10 +321,8 @@ def update_ann_index(spark: SparkSession, sf_dir: str) -> str:
     import shutil
 
     base = build_ann_index(spark, sf_dir)
-    path = f"{ann_index_path(sf_dir)}-incr"
-    if not os.path.exists(os.path.join(path, "_INCR_SUCCESS")):
-        tmp = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def write(tmp: str) -> None:
         shutil.copytree(base, tmp)
         batch = (
             table(spark, sf_dir, "embeddings")
@@ -380,10 +336,8 @@ def update_ann_index(spark: SparkSession, sf_dir: str) -> str:
             .withColumn("bucket", F.concat(F.lit("b"), F.col("sketch")))
         )
         batch.write.mode("append").partitionBy("bucket").parquet(tmp)
-        with open(os.path.join(tmp, "_INCR_SUCCESS"), "w") as f:
-            f.write("ok\n")
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(f"{ann_index_path(sf_dir)}-incr", write)
 
 
 @register(
@@ -785,48 +739,35 @@ _DUCK_KMEANS_FLAT = (
 KMEANS_FINAL_CENT = f"cent{KMEANS_ITERS - 1}"
 
 
-def ivf_index_path(sf_dir: str) -> str:
-    key = hashlib.md5(
-        f"ivf:{os.path.abspath(sf_dir)}:{_source_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_ivf_index", key)
-
-
-def build_ivf_index(
-    spark: SparkSession, sf_dir: str, path: str | None = None, force: bool = False
-) -> str:
+def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Train the k-means coarse quantizer ONCE and persist it as an IVF
     index artifact — the pay-once pattern of ``build_ann_index`` applied
     to the learned quantizer (round-3 verdict watch item: training must
     not re-run inside every probe).
 
-    Layout under ``path``:
+    Layout under the artifact directory:
     - ``centroids/``: (cid, i, c) — the final Lloyd-iteration centroid
       set (``KMEANS_FINAL_CENT``), K*DIM rows, read at probe time to
       assign the query vector to its cell;
     - ``vectors/``: (vec_id, label, embedding) hive-partitioned by
       ``cell`` (the final assignment), so a probe's scan reads one cell
       directory (``PartitionFilters``), never the corpus;
-    - ``_SUCCESS``: marker written last, before the atomic publish.
+    - ``_SUCCESS``: the ``tables.build_once`` marker.
 
     Training is the exact ``_kmeans_ctes`` SQL the DuckDB oracle runs
     (deterministic seeds, 6-dp-rounded distances), so the persisted
     assignment is bit-identical to the oracle's re-derivation.  The
     cache key embeds the source fingerprint (stale-data guard) and the
-    build publishes by atomic rename (race-safe), as with the ANN index.
+    build publishes through ``build_once`` (race-safe), as with the ANN
+    index.
     """
-    path = path or ivf_index_path(sf_dir)
-    if force:
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         e = table(spark, sf_dir, "embeddings")
         e.createOrReplaceTempView("embeddings")
         ctes = "WITH " + ",\n".join(_kmeans_ctes(_SPARK_KMEANS_FLAT))
         assign = spark.sql(f"{ctes}\nSELECT vec_id, cid FROM {KMEANS_ASSIGN}")
         cent = spark.sql(f"{ctes}\nSELECT cid, i, c FROM {KMEANS_FINAL_CENT}")
-        tmp = f"{path}.build-{os.getpid()}"
         (
             e.join(assign, "vec_id")
             .select("vec_id", "label", "embedding", F.col("cid").alias("cell"))
@@ -835,10 +776,10 @@ def build_ivf_index(
             .parquet(os.path.join(tmp, "vectors"))
         )
         cent.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(
+        artifact_path("ivf_index", sf_dir, _EMBEDDINGS, salt="ivf"), write
+    )
 
 
 def query_cell(spark: SparkSession, idx_path: str, sf_dir: str, vec_id: int = 0) -> tuple[int, list]:
@@ -973,15 +914,13 @@ def delete_from_ann_index(spark: SparkSession, sf_dir: str) -> str:
     tombstone-then-compact contract LSM stores and lakehouse formats use.
 
     The demo stage copies the ``-incr`` index to a ``-del`` artifact
-    (atomic publish, same discipline as ``update_ann_index``) so sibling
-    queries keep their pristine inputs."""
+    (published by ``tables.build_once``, like ``update_ann_index``) so
+    sibling queries keep their pristine inputs."""
     import shutil
 
     base = update_ann_index(spark, sf_dir)
-    path = f"{ann_index_path(sf_dir)}-del"
-    if not os.path.exists(os.path.join(path, "_DEL_SUCCESS")):
-        tmp = f"{path}.build-{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
+
+    def write(tmp: str) -> None:
         shutil.copytree(base, tmp)
         e = table(spark, sf_dir, "embeddings")
         dead = (
@@ -995,10 +934,8 @@ def delete_from_ann_index(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         dead.write.mode("overwrite").parquet(os.path.join(tmp, "_tombstones"))
-        with open(os.path.join(tmp, "_DEL_SUCCESS"), "w") as f:
-            f.write("ok\n")
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(f"{ann_index_path(sf_dir)}-del", write)
 
 
 #: probe-after-deletion oracle — shared verbatim by ``sim_ann_delete``
@@ -1274,38 +1211,24 @@ def _pq_code_cols(assign: str) -> str:
     return f"SELECT vec_id, {cols} FROM {assign} GROUP BY vec_id"
 
 
-def pq_index_path(sf_dir: str) -> str:
-    key = hashlib.md5(
-        f"pq:{os.path.abspath(sf_dir)}:{_source_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_pq_index", key)
-
-
-def build_pq_index(
-    spark: SparkSession, sf_dir: str, path: str | None = None, force: bool = False
-) -> str:
+def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
     """Train the PQ codebooks ONCE and persist the compressed corpus —
-    same pay-once/atomic-publish discipline as ``build_ivf_index``:
+    pay-once like ``build_ivf_index``, published by ``tables.build_once``:
 
     - ``codes/``: (vec_id, label, code_0..code_{PQ_SUB-1}) — the corpus
       compressed to {PQ_SUB} small ints per vector ({PQ_SUB}*2 bits of
       payload vs DIM floats: this table, not the embeddings, is what an
       ADC scan reads — the 32x IO reduction IS the operator);
     - ``codebook/``: (sub, cid, i, c) — {PQ_SUB}x{PQ_K} centroids;
-    - ``_SUCCESS`` marker, atomic rename, fingerprinted cache key.
+    - ``_SUCCESS`` marker and fingerprinted cache key (``tables.build_once``).
     """
-    path = path or pq_index_path(sf_dir)
-    if force:
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         e = table(spark, sf_dir, "embeddings")
         e.createOrReplaceTempView("embeddings")
         ctes = "WITH " + ",\n".join(_pq_ctes(_SPARK_KMEANS_FLAT))
         codes = spark.sql(f"{ctes}\n{_pq_code_cols(PQ_ASSIGN)}")
         book = spark.sql(f"{ctes}\nSELECT sub, cid, i, c FROM {PQ_CODEBOOK}")
-        tmp = f"{path}.build-{os.getpid()}"
         (
             e.select("vec_id", "label")
             .join(codes, "vec_id")
@@ -1313,10 +1236,8 @@ def build_pq_index(
             .parquet(os.path.join(tmp, "codes"))
         )
         book.write.mode("overwrite").parquet(os.path.join(tmp, "codebook"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(artifact_path("pq_index", sf_dir, _EMBEDDINGS, salt="pq"), write)
 
 
 def _adc_table(
@@ -1448,16 +1369,7 @@ def _ivfpq_ctes(flat_cte: str) -> list[str]:
     return _kmeans_ctes(flat_cte) + _pq_ctes(flat_cte)[1:]  # skip pq's duplicate flat
 
 
-def ivfpq_index_path(sf_dir: str) -> str:
-    key = hashlib.md5(
-        f"ivfpq:{os.path.abspath(sf_dir)}:{_source_fingerprint(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_ivfpq_index", key)
-
-
-def build_ivfpq_index(
-    spark: SparkSession, sf_dir: str, path: str | None = None, force: bool = False
-) -> str:
+def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
     """Train coarse quantizer + PQ codebooks ONCE; persist the corpus as
     PQ codes hive-partitioned by IVF cell:
 
@@ -1468,14 +1380,11 @@ def build_ivfpq_index(
     - ``codebook/``: the PQ codebooks (ADC lookup source);
     - ``centroids/``: the IVF centroids (query cell assignment).
 
-    Same atomic-publish / fingerprint / bit-identical-to-oracle
-    discipline as ``build_ivf_index`` and ``build_pq_index``."""
-    path = path or ivfpq_index_path(sf_dir)
-    if force:
-        import shutil
+    Published by ``tables.build_once`` under the embeddings fingerprint;
+    bit-identical to the oracle like ``build_ivf_index`` and
+    ``build_pq_index``."""
 
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         e = table(spark, sf_dir, "embeddings")
         e.createOrReplaceTempView("embeddings")
         ctes = "WITH " + ",\n".join(_ivfpq_ctes(_SPARK_KMEANS_FLAT))
@@ -1495,7 +1404,6 @@ def build_ivfpq_index(
             f"{ctes}\nSELECT -1 AS sub, cid, i, c FROM {KMEANS_FINAL_CENT}"
             f"\nUNION ALL SELECT sub, cid, i, c FROM {PQ_CODEBOOK}"
         ).toPandas()
-        tmp = f"{path}.build-{os.getpid()}"
         (
             e.select("vec_id", "label")
             .join(codes, "vec_id")
@@ -1509,10 +1417,10 @@ def build_ivfpq_index(
         spark.createDataFrame(
             small[small["sub"] < 0][["cid", "i", "c"]]
         ).coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(
+        artifact_path("ivfpq_index", sf_dir, _EMBEDDINGS, salt="ivfpq"), write
+    )
 
 
 @register(
@@ -1596,27 +1504,22 @@ def compact_ann_index(spark: SparkSession, sf_dir: str) -> str:
     At 100 TB the rewrite is restricted to the bucket partitions that
     actually CONTAIN tombstoned rows (join tombstones to their buckets,
     rewrite only those directories); the demo corpus rewrites all
-    buckets in one partitioned write.  Same atomic-publish discipline as
-    every other index artifact."""
+    buckets in one partitioned write.  Published by ``tables.build_once``
+    like every other index artifact."""
     src_path = delete_from_ann_index(spark, sf_dir)
-    path = f"{ann_index_path(sf_dir)}-compact"
-    if not os.path.exists(os.path.join(path, "_COMPACT_SUCCESS")):
+
+    def write(tmp: str) -> None:
         idx = artifact(spark, src_path)
         dead = artifact(spark, os.path.join(src_path, "_tombstones"))
         live = idx.join(F.broadcast(dead), "vec_id", "left_anti")
-        tmp = f"{path}.build-{os.getpid()}"
         # same bucket-clustered write as build_ann_index (guide §6):
         # compaction exists to fix file fragmentation, so it must not
         # reintroduce task x bucket fragments itself
         live.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
             "bucket"
         ).parquet(tmp)
-        with open(os.path.join(tmp, "_COMPACT_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass  # _publish_index race check keys on _SUCCESS
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(f"{ann_index_path(sf_dir)}-compact", write)
 
 
 @register("sim_ann_compacted", oracle=_DELETE_PROBE_ORACLE)
@@ -1802,8 +1705,8 @@ def sim_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     RADIUS_MOD rows by the id bound — NOT corpus-proportional; pinned by
     test_radius_search_broadcasts_probes_never_corpus); one scan of the
     corpus evaluates all probes per row (BroadcastNestedLoopJoin on a
-    deliberately tiny side — the pattern PLANS.md allows only for
-    bounded broadcast sides), with the cosine computed by the
+    deliberately tiny side — a pattern acceptable only for bounded
+    broadcast sides), with the cosine computed by the
     Arrow-vectorized ``pair_cos_udf`` (sequential-over-dims fold,
     bit-identical to the oracle's list_sum after 6dp rounding — the
     flat SQL expression would evaluate interpreted, the measured 32x

@@ -16,8 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..relational import register
-from ..tables import artifact, table
+from ..tables import artifact, artifact_path, build_once, table
 from .dedup import word_chunk_array, word_chunks_sql
+
+#: the source table every text artifact is fingerprinted on
+_DOCUMENTS = ("documents.parquet",)
 
 # Marker stopwords per language for the marker-word language-ID heuristic.
 # (Deterministic toy dictionaries — the point is the distributed scoring
@@ -1389,19 +1392,6 @@ def _bpe_oracle() -> str:
     return _bpe_chain_sql(apply_final=False) + "\n" + "\nUNION ALL ".join(selects)
 
 
-def bpe_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from .similarity import _source_fingerprint
-
-    key = hashlib.md5(
-        f"bpe:v1:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_bpe", key)
-
-
 def build_bpe(spark: SparkSession, sf_dir: str) -> str:
     """Run the BPE merge loop ONCE and persist both halves — the
     pay-once artifact pattern of ``build_unigram_lm`` applied to the
@@ -1410,16 +1400,12 @@ def build_bpe(spark: SparkSession, sf_dir: str) -> str:
     fingerprint-keyed path: ``merges/`` = (step, w1, w2, merged,
     support), the graded merge decisions, and ``wordsubs/`` =
     (w, cnt, n_sub), the fully-merged per-word subword counts the
-    segmenter broadcasts (capped).  Atomic publish, stale-data guard
-    via the source fingerprint."""
+    segmenter broadcasts (capped).  Published by ``tables.build_once``
+    under the documents fingerprint (stale-data guard)."""
     import os
 
-    from .similarity import _publish_index
-
-    path = bpe_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         merges, vocab = _bpe_merge_loop(spark, sf_dir, apply_final=True)
-        tmp = f"{path}.build-{os.getpid()}"
         merges.write.mode("overwrite").parquet(os.path.join(tmp, "merges"))
         (
             vocab.select(
@@ -1430,10 +1416,8 @@ def build_bpe(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(tmp, "wordsubs"))
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(artifact_path("bpe", sf_dir, _DOCUMENTS, salt="bpe:v1"), write)
 
 
 @register("text_bpe_merge_steps", oracle=_bpe_oracle())
@@ -2022,22 +2006,6 @@ def _uni_train_chain(
     return pruned, words, max_len
 
 
-def unigram_lm_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from .similarity import _source_fingerprint
-
-    # v2: the artifact gained wordpaths/ (the serving-side Viterbi map);
-    # the key is versioned so v1 artifacts from earlier rounds cannot
-    # serve silently without it
-    key = hashlib.md5(
-        f"unilm:v2:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_unigram_lm", key)
-
-
 def build_unigram_lm(spark: SparkSession, sf_dir: str) -> str:
     """Train the unigram-LM piece table ONCE and persist it — the
     pay-once artifact pattern of ``similarity.build_ivf_index`` (r3
@@ -2048,16 +2016,13 @@ def build_unigram_lm(spark: SparkSession, sf_dir: str) -> str:
     vocabulary under the pruned pieces, so SERVING never re-runs the
     DP (r11: the segment twin previously paid the full vocab Viterbi
     per call; now it is part of the one-time build, like the IVF cell
-    layout).  Atomic publish, stale-data guard via the source
-    fingerprint (key versioned v2 for the layout change)."""
+    layout).  Published by ``tables.build_once`` under the documents
+    fingerprint; the key's salt is versioned v2 for the wordpaths/
+    layout change, so a v1 artifact can never serve without it."""
     import os
 
-    from .similarity import _publish_index
-
-    path = unigram_lm_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         pruned, words, max_len = _uni_train_chain(spark, sf_dir)
-        tmp = f"{path}.build-{os.getpid()}"
         pruned.write.mode("overwrite").parquet(os.path.join(tmp, "pieces"))
         vt = _uni_viterbi(words, _uni_lp(pruned), max_len)
         (
@@ -2068,10 +2033,10 @@ def build_unigram_lm(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(tmp, "wordpaths"))
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(
+        artifact_path("unigram_lm", sf_dir, _DOCUMENTS, salt="unilm:v2"), write
+    )
 
 
 @register("text_unigram_lm_train", oracle=_uni_train_oracle())
@@ -2322,34 +2287,17 @@ def _wp_merge_loop(
     return merges, vocab
 
 
-def wordpiece_path(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    from .similarity import _source_fingerprint
-
-    key = hashlib.md5(
-        f"wordpiece:v1:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_wordpiece", key)
-
-
 def build_wordpiece(spark: SparkSession, sf_dir: str) -> str:
     """Run the WordPiece merge loop ONCE and persist both halves — the
-    ``build_bpe`` pay-once artifact pattern (fingerprint-keyed path,
-    atomic publish, stale-data guard via the source fingerprint):
+    ``build_bpe`` pay-once artifact (``tables.build_once`` under the
+    documents fingerprint):
     ``merges/`` = the graded merge decisions, ``wordsubs/`` =
     (w, cnt, n_sub) fully-merged per-word subword counts the segmenter
     broadcasts (capped)."""
     import os
 
-    from .similarity import _publish_index
-
-    path = wordpiece_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def write(tmp: str) -> None:
         merges, vocab = _wp_merge_loop(spark, sf_dir, apply_final=True)
-        tmp = f"{path}.build-{os.getpid()}"
         merges.write.mode("overwrite").parquet(os.path.join(tmp, "merges"))
         (
             vocab.select(
@@ -2360,10 +2308,10 @@ def build_wordpiece(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(os.path.join(tmp, "wordsubs"))
         )
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+
+    return build_once(
+        artifact_path("wordpiece", sf_dir, _DOCUMENTS, salt="wordpiece:v1"), write
+    )
 
 
 @register("text_wordpiece_train", oracle=_wp_oracle())
@@ -2515,19 +2463,8 @@ def text_kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def kn_path(sf_dir: str, tag: str) -> str:
     """Fingerprint-keyed artifact dir for the KN count tables (bigram
-    tag='kn2', trigram tag='kn3') — the bpe_path discipline: a
-    regenerated corpus at the same path gets a different key, so a
-    stale LM can never score fresh data."""
-    import hashlib
-    import os
-
-    from .similarity import _source_fingerprint
-
-    key = hashlib.md5(
-        f"{tag}:v1:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_kn", key)
+    tag='kn2', trigram tag='kn3')."""
+    return artifact_path("kn", sf_dir, _DOCUMENTS, salt=f"{tag}:v1")
 
 
 def _kn_rebuild() -> bool:
@@ -2537,6 +2474,15 @@ def _kn_rebuild() -> bool:
     import os
 
     return os.environ.get("SPARK_GRAFT_KN_REBUILD", "") == "1"
+
+
+def _write_tables(tables: dict[str, DataFrame], tmp: str) -> None:
+    """Write each named table as parquet under ``tmp/<name>`` — the
+    ``build_once`` write step of the multi-table artifacts."""
+    import os
+
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(os.path.join(tmp, name))
 
 
 def _kn_bigram_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -2567,23 +2513,13 @@ def build_kn(spark: SparkSession, sf_dir: str) -> str:
     """Persist the interpolated-KN bigram count tables ONCE (VERDICT
     r11 item 4): the docstring contract "at 100 TB the count tables
     persist as artifacts and only the joins+agg recur" made real, the
-    build_bpe/build_doremi pay-once pattern.  Atomic publish under the
-    fingerprint-keyed path; stale-data guard via the documents
-    fingerprint."""
-    import os
-
-    from .similarity import _publish_index
-
-    path = kn_path(sf_dir, "kn2")
-    if _kn_rebuild() or not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t = _kn_bigram_tables(spark, sf_dir)
-        tmp = f"{path}.build-{os.getpid()}"
-        for name, df in t.items():
-            df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+    build_bpe/build_doremi pay-once pattern, published by
+    ``tables.build_once`` under the documents fingerprint."""
+    return build_once(
+        kn_path(sf_dir, "kn2"),
+        lambda tmp: _write_tables(_kn_bigram_tables(spark, sf_dir), tmp),
+        rebuild=_kn_rebuild(),
+    )
 
 
 def flat_trigrams(ws: DataFrame) -> DataFrame:
@@ -2840,20 +2776,11 @@ def build_kn_trigram(spark: SparkSession, sf_dir: str) -> str:
     the corpus exactly twice (the checkpointed tgf explode + nothing
     else: every other table is a vocab-bounded rollup of tgf/mid/low);
     serving then scans the corpus once and pays only joins+agg."""
-    import os
-
-    from .similarity import _publish_index
-
-    path = kn_path(sf_dir, "kn3")
-    if _kn_rebuild() or not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t = _kn_trigram_tables(spark, sf_dir)
-        tmp = f"{path}.build-{os.getpid()}"
-        for name, df in t.items():
-            df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+    return build_once(
+        kn_path(sf_dir, "kn3"),
+        lambda tmp: _write_tables(_kn_trigram_tables(spark, sf_dir), tmp),
+        rebuild=_kn_rebuild(),
+    )
 
 
 def _kn3_tables_sql(pred: str = "TRUE") -> str:

@@ -1063,7 +1063,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-local (bucketing is the static complement to AQE —
     co-location the runtime cannot retrofit).  The layout artifact is
     fingerprinted to the source parquet and published atomically
-    (similarity.build_ann_index discipline)."""
+    (``tables.build_once``)."""
     from .layout import build_bucketed_layout
 
     names = build_bucketed_layout(spark, sf_dir)

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..streaming.operators import enrich_stream_static
 from . import relational
 from .relational import register
-from .tables import normalize_event_ts, table
+from .tables import artifact_path, build_once, normalize_event_ts, table
 
 _SEQ = [0]
 
@@ -2244,31 +2244,23 @@ from .llmdata.curation import (  # noqa: E402
     FUZZY_BLOCK_DF,
     FUZZY_CONTAM_MAX_REL,
 )
+from .llmdata.text import _DOCUMENTS, _write_tables  # noqa: E402
 
 
 def fuzzy_path(sf_dir: str) -> str:
     """Fingerprint-keyed artifact dir for the fuzzy screen's trained
-    tables (static-slice shingle DF + rarity + benchmark sides) — the
-    ``kn_path`` discipline: a regenerated corpus at the same path gets
-    a different key, so a stale rarity table can never screen fresh
-    data.  The fingerprint is the recursive part-file walk of
-    ``_source_fingerprint`` (ADVICE r12).  The tuning constants the
-    persisted tables depend on (blocking threshold, benchmark modulus,
-    corpus split, shingle width — hard-coded 3 in ``distinct_shingles_of``) are
-    folded into the key so changing any of them invalidates the
-    artifact automatically instead of serving a stale blocking set
-    (ADVICE r13)."""
-    import hashlib
-    import os
-
-    from .llmdata.similarity import _source_fingerprint
-
-    key = hashlib.md5(
-        f"fuzzy:v1:shingle3:{FUZZY_BLOCK_DF}:{BENCH_MOD}:"
-        f"{CURATION_CORPUS_SPLIT}:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_fuzzy", key)
+    tables (static-slice shingle DF + rarity + benchmark sides).  The
+    tuning constants the persisted tables depend on (blocking threshold,
+    benchmark modulus, corpus split, shingle width — hard-coded 3 in
+    ``distinct_shingles_of``) are folded into the key so changing any of
+    them invalidates the artifact automatically instead of serving a
+    stale blocking set (ADVICE r13)."""
+    return artifact_path(
+        "fuzzy",
+        sf_dir,
+        _DOCUMENTS,
+        salt=f"fuzzy:v1:shingle3:{FUZZY_BLOCK_DF}:{BENCH_MOD}:{CURATION_CORPUS_SPLIT}",
+    )
 
 
 def _fuzzy_static_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -2300,38 +2292,17 @@ def _fuzzy_static_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFram
 def build_fuzzy(spark: SparkSession, sf_dir: str) -> str:
     """Persist the fuzzy screen's trained tables ONCE (VERDICT r12 item
     3, closing the docstring's own "at scale it persists as an
-    artifact" promise): the ``build_kn`` pay-once pattern — atomic
-    publish under the fingerprint-keyed path, stale-data guard via the
-    documents fingerprint, SPARK_GRAFT_FUZZY_REBUILD=1 forces a cold
+    artifact" promise), published by ``tables.build_once`` under the
+    fingerprint-keyed path; SPARK_GRAFT_FUZZY_REBUILD=1 forces a cold
     build for the trainer-path scale probe.  Serving then reads the
     artifact (probe joins only); the rarity table is refreshed from the
     drained stream by ``streaming_fuzzy_refresh`` on the line-dedup
     cadence."""
-    import os
-
-    from .llmdata.similarity import _publish_index
-
-    path = fuzzy_path(sf_dir)
-    rebuild = os.environ.get("SPARK_GRAFT_FUZZY_REBUILD", "") == "1"
-    if rebuild and os.path.exists(path):
-        # A forced rebuild must actually REPLACE the artifact:
-        # publish_atomic keeps an existing _SUCCESS-marked destination
-        # (concurrent-builder rule), so without this removal the fresh
-        # build lands in tmp and is silently discarded — the flag could
-        # never recover a corrupted-yet-marker-present artifact
-        # (ADVICE r13).
-        import shutil
-
-        shutil.rmtree(path)
-    if rebuild or not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t = _fuzzy_static_tables(spark, sf_dir)
-        tmp = f"{path}.build-{os.getpid()}"
-        for name, df in t.items():
-            df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-        with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-            pass
-        _publish_index(tmp, path)
-    return path
+    return build_once(
+        fuzzy_path(sf_dir),
+        lambda tmp: _write_tables(_fuzzy_static_tables(spark, sf_dir), tmp),
+        rebuild=os.environ.get("SPARK_GRAFT_FUZZY_REBUILD", "") == "1",
+    )
 
 
 def _fuzzy_stream_oracle() -> str:
@@ -2567,45 +2538,6 @@ def streaming_fuzzy_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def republish_refreshed(
-    tables: dict[str, DataFrame],
-    path: str,
-    copy_from: str | None = None,
-    copy_names: tuple[str, ...] = (),
-) -> str:
-    """Atomically publish a REFRESHED artifact generation (VERDICT r13
-    item 2 — the shared helper closing the serve->refresh->re-serve
-    loop for every trained-table family): write each refreshed table
-    under a tmp dir, carry over the generation-invariant tables from
-    the previous artifact by directory copy (``copy_names`` — e.g. the
-    fuzzy screen's benchmark sides, static by definition), then
-    ``_publish_index`` (rename-or-keep-winner, the build_kn
-    discipline).  An existing ``_SUCCESS``-marked generation short
-    circuits — republish is pay-once per generation, exactly like the
-    builds.  On an object store the copytree becomes a server-side
-    copy; the rename becomes the store's atomic pointer swap."""
-    import os
-    import shutil
-
-    from .llmdata.similarity import _publish_index
-
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    tmp = f"{path}.build-{os.getpid()}"
-    for name, df in tables.items():
-        df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-    for name in copy_names:
-        shutil.copytree(
-            os.path.join(copy_from, name),
-            os.path.join(tmp, name),
-            dirs_exist_ok=True,
-        )
-    with open(os.path.join(tmp, "_SUCCESS"), "w", encoding="utf-8"):
-        pass
-    _publish_index(tmp, path)
-    return path
-
-
 def republish_fuzzy(spark: SparkSession, sf_dir: str) -> str:
     """Execute the fuzzy screen's production refresh cycle (VERDICT r13
     item 2 — the near-gap made real): run the graded refresh fold
@@ -2617,58 +2549,52 @@ def republish_fuzzy(spark: SparkSession, sf_dir: str) -> str:
     serving epoch reads THIS path — ``streaming_fuzzy_serve_refreshed``
     grades exactly that read against a full-corpus-DF oracle, so the
     fan-out convergence the r13 probe simulated is now served and
-    driver-graded."""
-    import os
+    driver-graded.  Republish is pay-once per generation, exactly like
+    the builds (``tables.build_once``); on an object store the copytree
+    becomes a server-side copy and the rename the store's atomic pointer
+    swap."""
+    import shutil
 
-    path2 = fuzzy_path(sf_dir) + "-g2"
-    if os.path.exists(os.path.join(path2, "_SUCCESS")):
-        return path2
-    merged = streaming_fuzzy_refresh(spark, sf_dir)
-    return republish_refreshed(
-        {
-            "sdf": merged.select("shingle", "df"),
-            "rare": merged.filter(F.col("rare")).select("shingle"),
-        },
-        path2,
-        copy_from=build_fuzzy(spark, sf_dir),
-        copy_names=("be", "bt"),
-    )
+    def write(tmp: str) -> None:
+        merged = streaming_fuzzy_refresh(spark, sf_dir)
+        _write_tables(
+            {
+                "sdf": merged.select("shingle", "df"),
+                "rare": merged.filter(F.col("rare")).select("shingle"),
+            },
+            tmp,
+        )
+        static = build_fuzzy(spark, sf_dir)
+        for name in ("be", "bt"):
+            shutil.copytree(os.path.join(static, name), os.path.join(tmp, name))
+
+    return build_once(fuzzy_path(sf_dir) + "-g2", write)
 
 
 def refreshed_path(sf_dir: str, family: str) -> str:
     """Fingerprint-keyed generation-2 artifact dir for a refresh
-    family's republished table — the ``fuzzy_path`` discipline (the
-    family name and a version tag in the key; a regenerated corpus at
-    the same path gets a different key)."""
-    import hashlib
-    import os
-
-    from .llmdata.similarity import _source_fingerprint
-
-    key = hashlib.md5(
-        f"{family}:g2:v1:{os.path.abspath(sf_dir)}:"
-        f"{_source_fingerprint(sf_dir, 'documents.parquet')}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/spark_graft_refreshed", f"{family}-{key}")
+    family's republished table (the family name and a version tag in
+    the key's salt)."""
+    return artifact_path("refreshed", sf_dir, _DOCUMENTS, salt=f"{family}:g2:v1")
 
 
 def republish_line_dedup(spark: SparkSession, sf_dir: str) -> str:
     """Republish the C4 line gate's refreshed membership table (the
-    ``republish_fuzzy`` cycle via the shared helper): the next serving
-    epoch's ``_hist_line_table`` is this parquet instead of an in-plan
-    corpus scan."""
-    return republish_refreshed(
-        {"lines": streaming_line_dedup_refresh(spark, sf_dir)},
+    ``republish_fuzzy`` cycle): the next serving epoch's
+    ``_hist_line_table`` is this parquet instead of an in-plan corpus
+    scan."""
+    return build_once(
         refreshed_path(sf_dir, "linededup"),
+        lambda tmp: _write_tables({"lines": streaming_line_dedup_refresh(spark, sf_dir)}, tmp),
     )
 
 
 def republish_semdedup(spark: SparkSession, sf_dir: str) -> str:
     """Republish the SemDeDup gate's refreshed per-cell centroid/stats
     table (bounded K*DIM rows — the ``build_ivf_index`` artifact class)."""
-    return republish_refreshed(
-        {"cells": streaming_semdedup_refresh(spark, sf_dir)},
+    return build_once(
         refreshed_path(sf_dir, "semdedup"),
+        lambda tmp: _write_tables({"cells": streaming_semdedup_refresh(spark, sf_dir)}, tmp),
     )
 
 
@@ -2676,18 +2602,18 @@ def republish_kn(spark: SparkSession, sf_dir: str) -> str:
     """Republish the KN filter's refreshed trigram count table — the
     corpus-scaled half of the artifact; the discount refit over it is
     the vocab-bounded chain the batch trainer grades."""
-    return republish_refreshed(
-        {"tgf": streaming_kn_refresh(spark, sf_dir)},
+    return build_once(
         refreshed_path(sf_dir, "kn3"),
+        lambda tmp: _write_tables({"tgf": streaming_kn_refresh(spark, sf_dir)}, tmp),
     )
 
 
 def republish_cdc(spark: SparkSession, sf_dir: str) -> str:
     """Republish the CDC gate's refreshed chunk membership table —
     the next epoch's history side for ``streaming_cdc_dedup``."""
-    return republish_refreshed(
-        {"chunks": streaming_cdc_refresh(spark, sf_dir)},
+    return build_once(
         refreshed_path(sf_dir, "cdcchunks"),
+        lambda tmp: _write_tables({"chunks": streaming_cdc_refresh(spark, sf_dir)}, tmp),
     )
 
 

@@ -11,7 +11,10 @@ queries where it matters).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,9 +32,6 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
-
-# Dimensions small enough to broadcast at any scale factor.
-BROADCAST_TABLES = {"region", "nation", "supplier"}
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -128,6 +128,96 @@ def artifact(spark: SparkSession, path: str) -> DataFrame:
     return hit
 
 
+# ---------------------------------------------------------------------------
+# Artifact store: the one place a persisted engine artifact (ANN/IVF/PQ
+# index, tokenizer or KN count tables, trained weights, bucketed or
+# z-order layout, refreshed generation) is keyed and published.  Builders
+# keep their own table-writing code and hand it to ``build_once`` as a
+# ``write(tmp)`` callable; ``artifact`` above reads what it publishes.
+# ---------------------------------------------------------------------------
+
+
+def _source_fingerprint(sf_dir: str, name: str) -> str:
+    """mtime+size fingerprint of one source table under ``sf_dir``:
+    regenerated testdata at the same path gets a different cache key, so
+    a stale artifact can never be served against fresh data.
+
+    When the source is a Spark-written DIRECTORY the fingerprint walks
+    the tree and folds every file's (relpath, mtime_ns, size) — ADVICE
+    r12: rewriting part files in place with identical names and sizes
+    can leave the top-level directory stat unchanged.  Single-file
+    sources keep the cheap one-stat path."""
+    root = os.path.join(sf_dir, name)
+    st = os.stat(root)
+    if not os.path.isdir(root):
+        return f"{st.st_mtime_ns}-{st.st_size}"
+    parts: list[str] = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames.sort()
+        for fn in sorted(filenames):
+            fst = os.stat(os.path.join(dirpath, fn))
+            rel = os.path.relpath(os.path.join(dirpath, fn), root)
+            parts.append(f"{rel}:{fst.st_mtime_ns}:{fst.st_size}")
+    return hashlib.md5("|".join(parts).encode()).hexdigest()[:16]
+
+
+def artifact_path(
+    family: str, sf_dir: str, sources: tuple[str, ...], salt: str = ""
+) -> str:
+    """``/tmp/spark_graft_<family>/<key>``, where the key hashes ``salt``
+    (a layout version tag plus any tuning constant the persisted tables
+    depend on), the absolute ``sf_dir`` and the fingerprint of every
+    ``sources`` table — changing any of them yields a fresh path."""
+    fps = "|".join(f"{s}:{_source_fingerprint(sf_dir, s)}" for s in sources)
+    key = hashlib.md5(
+        f"{salt}:{os.path.abspath(sf_dir)}:{fps}".encode()
+    ).hexdigest()[:12]
+    return os.path.join(f"/tmp/spark_graft_{family}", key)
+
+
+def publish_atomic(tmp: str, path: str, marker: str) -> None:
+    """Atomically rename ``tmp`` into place.  If the rename fails, only a
+    concurrent builder's COMPLETED artifact (``marker`` present at the
+    destination) excuses it — both builds are deterministic-identical,
+    keep theirs.  Any other failure (EACCES, EXDEV, ENOENT on a missing
+    parent, a non-empty unmarked destination) re-raises WITH the tmp
+    build left on disk, so a real failure stays inspectable."""
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        if not os.path.exists(os.path.join(path, marker)):
+            raise
+        shutil.rmtree(tmp, ignore_errors=True)  # concurrent builder won
+
+
+def build_once(
+    path: str,
+    write: Callable[[str], None],
+    rebuild: bool = False,
+    marker: str = "_SUCCESS",
+) -> str:
+    """Publish the artifact at ``path`` once and return ``path``.
+
+    A published artifact (``marker`` present) is returned as is unless
+    ``rebuild``, which removes it first.  Otherwise ``write(tmp)`` fills
+    ``<path>.build-<pid>`` (cleared first: a crashed build of this
+    process never leaks into a publish), the marker is written last, and
+    ``publish_atomic`` renames the directory into place — a republished
+    artifact is a new inode, which is what keeps ``artifact``'s memo
+    valid."""
+    if rebuild:
+        shutil.rmtree(path, ignore_errors=True)
+    elif os.path.exists(os.path.join(path, marker)):
+        return path
+    tmp = f"{path}.build-{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
+    with open(os.path.join(tmp, marker), "w", encoding="utf-8"):
+        pass
+    publish_atomic(tmp, path, marker)
+    return path
+
+
 def _ensure_events_confs(spark: SparkSession) -> None:
     for conf_key, want in (
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
@@ -188,10 +278,6 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     if n < par:
         df = df.repartition(par, *[F.col(k) for k in keys])
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: table(spark, sf_dir, n) for n in TABLE_NAMES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -172,26 +172,19 @@ def route(raw: DataFrame, cfg: CollectorConfig) -> DataFrame:
         "partition_key",
     )
 
-    # F7 size routing: the JVM computes the accounting size so only
-    # oversized rows pay the Python stage.  Under the default "thrift"
-    # accounting the size is the exact TBinaryProtocol record size
-    # (reference parity, SplitBatch.scala:84-99); under "json" it is the
-    # canonical compact-JSON UTF-8 size.  ignoreNullFields=false so the
-    # JVM serialization matches the Python splitter's canonical form
-    # (null fields included) byte-for-byte.
+    # F7 size routing: the JVM computes the size so only oversized rows
+    # pay the Python stage.  The size is the exact TBinaryProtocol record
+    # size (reference parity, SplitBatch.scala:84-99).
+    # ignoreNullFields=false so the JVM serialization matches the Python
+    # splitter's canonical form (null fields included) byte-for-byte.
     is_event = F.col("is_event")
     serialized = F.expr(
         f"to_json(struct({', '.join(split._PAYLOAD_FIELDS)}),"
         " map('ignoreNullFields', 'false'))"
     )
-    size = (
-        split.thrift_size_expr()
-        if cfg.good_sink.size_accounting == "thrift"
-        else F.expr("cast(octet_length(serialized) as bigint)")
-    )
     return (
         payload.withColumn("serialized", F.when(is_event, serialized))
-        .withColumn("serialized_size", F.when(is_event, size))
+        .withColumn("serialized_size", F.when(is_event, split.thrift_size_expr()))
         .select("is_event", *_EVENT_COLUMNS)
     )
 
@@ -212,7 +205,7 @@ def run(routed: DataFrame, cfg: CollectorConfig) -> PipelineResult:
     # logical split (optimization r14, guide §4 / §2.4).  Lazy: callers
     # that never execute (plan-only inspection) pay nothing.
     split_out = oversized.mapInPandas(
-        split.make_split_map_fn(cfg, max_bytes), split.SPLIT_OUT_SCHEMA
+        split.make_split_map_fn(max_bytes), split.SPLIT_OUT_SCHEMA
     ).localCheckpoint(eager=False)
     # The split stage emits full payload rows, so split goods union straight
     # back — no re-join on request_id (which is NOT unique after the

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     IntegerType,
     LongType,
     MapType,
@@ -40,46 +39,6 @@ RAW_REQUEST_SCHEMA = StructType(
         StructField("content_type", StringType()),
         StructField("sp_anonymous", StringType()),
         StructField("request_time", TimestampType()),
-    ]
-)
-
-# Columns appended by the pipeline to form the canonical event
-# (CollectorPayload Thrift fields, Spark mapping per SURVEY §1.1).
-COLLECTOR_PAYLOAD_COLUMNS = [
-    "schema",
-    "ip_address",
-    "timestamp",
-    "encoding",
-    "collector",
-    "querystring",
-    "body",
-    "path",
-    "user_agent",
-    "referer_uri",
-    "hostname",
-    "network_user_id",
-    "headers",
-    "content_type",
-    "partition_key",
-]
-
-COLLECTOR_PAYLOAD_SCHEMA_T = StructType(
-    [
-        StructField("schema", StringType()),
-        StructField("ip_address", StringType()),
-        StructField("timestamp", LongType()),
-        StructField("encoding", StringType()),
-        StructField("collector", StringType()),
-        StructField("querystring", StringType()),
-        StructField("body", StringType()),
-        StructField("path", StringType()),
-        StructField("user_agent", StringType()),
-        StructField("referer_uri", StringType()),
-        StructField("hostname", StringType()),
-        StructField("network_user_id", StringType()),
-        StructField("headers", ArrayType(StringType())),
-        StructField("content_type", StringType()),
-        StructField("partition_key", StringType()),
     ]
 )
 

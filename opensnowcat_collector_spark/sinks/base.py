@@ -18,6 +18,7 @@ from __future__ import annotations
 import random
 import time
 from abc import ABC, abstractmethod
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -51,6 +52,29 @@ class Sink(ABC):
 
     def shutdown(self) -> None:  # graceful drain hook (Collector.scala:206-233)
         pass
+
+
+class RecordSink(Sink):
+    """The one delivery loop of the queue and cloud sinks: every record's
+    ``partition_key`` and ``serialized`` reach ``_deliver`` as dicts,
+    per partition on the executors (``distributed`` — each partition
+    with its own client; records never collect to the driver) or through
+    a driver-side iterator for tests with injected fake clients (same
+    ``_deliver`` code path)."""
+
+    distributed: bool
+
+    @abstractmethod
+    def _deliver(self, rows: Iterable[dict]) -> None:
+        """Deliver one partition's records; raise to fail the task."""
+
+    def write(self, df: DataFrame, epoch_id: int = 0) -> None:
+        recs = df.select("partition_key", "serialized")
+        if self.distributed:
+            deliver = self._deliver
+            recs.foreachPartition(lambda rows: deliver(r.asDict() for r in rows))
+        else:
+            self._deliver(r.asDict() for r in recs.toLocalIterator())
 
 
 @dataclass

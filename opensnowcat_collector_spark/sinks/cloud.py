@@ -13,10 +13,11 @@ reference parity:
 - A2 sub-batching (KinesisSink.scala:545-572): first-fit packing into
   <=`max_records`, <=`max_batch_bytes` request groups.
 
-Scale design: ``write`` runs ``foreachPartition`` so every executor
-delivers its own partition with its own client — records never collect
-to the driver.  ``distributed=False`` switches to a driver-side iterator
-for tests with injected fake clients (same chunk/retry code path).
+Scale design: both sinks deliver through ``base.RecordSink``'s loop —
+``foreachPartition``, so every executor delivers its own partition with
+its own client and records never collect to the driver;
+``distributed=False`` switches to a driver-side iterator for tests with
+injected fake clients (same chunk/retry code path).
 Spark task retry re-runs a failed partition; delivery is therefore
 at-least-once, same as the reference (SURVEY §4.1).
 """
@@ -28,9 +29,7 @@ import random
 import time
 from collections.abc import Callable, Iterable, Iterator
 
-from pyspark.sql import DataFrame
-
-from .base import BackoffPolicy, Sink
+from .base import BackoffPolicy, RecordSink
 
 KINESIS_MAX_RECORDS = 500  # PutRecords API limit
 SQS_MAX_BATCH = 10  # SendMessageBatch API limit (SqsSink.scala:55)
@@ -74,7 +73,7 @@ def _retry_loop(send_failed, entries, policy, rng, sleep, on_exhausted):
         on_exhausted(failed)
 
 
-class KinesisSink(Sink):
+class KinesisSink(RecordSink):
     """K1: PutRecords with per-record retry and optional SQS failover."""
 
     def __init__(
@@ -109,7 +108,7 @@ class KinesisSink(Sink):
         if status not in ("ACTIVE", "UPDATING"):
             raise RuntimeError(f"stream {self.stream_name} is {status}")
 
-    def _deliver_partition(self, rows: Iterable) -> None:
+    def _deliver(self, rows: Iterable) -> None:
         client = self.client_factory()
         policy, rng, sleep = self.policy, self.rng, self.sleep
 
@@ -151,14 +150,6 @@ class KinesisSink(Sink):
             self.max_batch_bytes,
         ):
             _retry_loop(send_failed, batch, policy, rng, sleep, on_exhausted)
-
-    def write(self, df: DataFrame, epoch_id: int = 0) -> None:
-        recs = df.select("partition_key", "serialized")
-        if self.distributed:
-            deliver = self._deliver_partition
-            recs.foreachPartition(lambda rows: deliver(rows))
-        else:
-            self._deliver_partition(r.asDict() for r in recs.toLocalIterator())
 
 
 def _raise_delivery_error(failed) -> None:
@@ -215,7 +206,7 @@ def _sqs_send(client, queue_url, entries, policy, rng, sleep, on_exhausted):
     _retry_loop(send_failed, entries, policy, rng, sleep, on_exhausted)
 
 
-class SqsSink(Sink):
+class SqsSink(RecordSink):
     """K3: SQS primary sink."""
 
     def __init__(
@@ -242,7 +233,7 @@ class SqsSink(Sink):
             QueueUrl=self.queue_url, AttributeNames=["QueueArn"]
         )
 
-    def _deliver_partition(self, rows: Iterable) -> None:
+    def _deliver(self, rows: Iterable) -> None:
         client = self.client_factory()
         entries = [(r["partition_key"], r["serialized"]) for r in rows]
         if entries:
@@ -255,11 +246,3 @@ class SqsSink(Sink):
                 self.sleep,
                 on_exhausted=_raise_delivery_error,
             )
-
-    def write(self, df: DataFrame, epoch_id: int = 0) -> None:
-        recs = df.select("partition_key", "serialized")
-        if self.distributed:
-            deliver = self._deliver_partition
-            recs.foreachPartition(lambda rows: deliver(rows))
-        else:
-            self._deliver_partition(r.asDict() for r in recs.toLocalIterator())

@@ -16,21 +16,18 @@ reference parity:
 - A3 (kafka/.../sinks/sqs/EventBuffer.scala:29-64): bounded FIFO that
   drops the OLDEST on overflow and counts drops.
 
-Like cloud.py, delivery runs per-partition on executors
-(``distributed=True``) or driver-side for fake-injected tests.
+Like cloud.py, delivery is ``base.RecordSink``'s loop: per-partition on
+executors (``distributed=True``) or driver-side for fake-injected tests.
 """
 
 from __future__ import annotations
 
-import json
 import time
 from collections import deque
 from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame
-
 from ..config import BufferConfig
-from .base import Sink
+from .base import RecordSink
 
 
 class EventBuffer:
@@ -56,14 +53,6 @@ class EventBuffer:
         return len(self._q)
 
 
-def _iter_payloads(df: DataFrame, distributed: bool, deliver) -> None:
-    recs = df.select("partition_key", "serialized")
-    if distributed:
-        recs.foreachPartition(lambda rows: deliver(r.asDict() if hasattr(r, "asDict") else r for r in rows))
-    else:
-        deliver(r.asDict() for r in recs.toLocalIterator())
-
-
 def create_gcp_user_agent(product_name: str = "Snowplow OSS") -> str:
     """GCP partner user-agent string, byte-identical with the reference
     (GooglePubSubSink.scala:218-219, GcpUserAgentSpec.scala): the GPN
@@ -71,7 +60,7 @@ def create_gcp_user_agent(product_name: str = "Snowplow OSS") -> str:
     return f"{product_name}/collector (GPN:Snowplow;)"
 
 
-class PubSubSink(Sink):
+class PubSubSink(RecordSink):
     """K4: publisher injectable; batching knobs mirror BufferConfig;
     requests carry the GPN partner user-agent
     (GooglePubSubSink.scala:205-219, `gcpUserAgent.productName`)."""
@@ -102,9 +91,6 @@ class PubSubSink(Sink):
         for f in futures:  # surface the first failure -> Spark task retry
             f.result()
 
-    def write(self, df: DataFrame, epoch_id: int = 0) -> None:
-        _iter_payloads(df, self.distributed, self._deliver)
-
 
 def _default_pubsub_factory(buffer: BufferConfig, user_agent: str | None = None):
     def factory():
@@ -134,7 +120,7 @@ def _default_pubsub_factory(buffer: BufferConfig, user_agent: str | None = None)
     return factory
 
 
-class NsqSink(Sink):
+class NsqSink(RecordSink):
     """K5: synchronous multi-publish over NSQ's HTTP /mpub endpoint."""
 
     def __init__(
@@ -157,9 +143,6 @@ class NsqSink(Sink):
             if status >= 300:
                 raise RuntimeError(f"nsq mpub returned {status}")
 
-    def write(self, df: DataFrame, epoch_id: int = 0) -> None:
-        _iter_payloads(df, self.distributed, self._deliver)
-
 
 def _urllib_post(url: str, body: bytes) -> int:
     from urllib.request import Request, urlopen
@@ -168,7 +151,7 @@ def _urllib_post(url: str, body: bytes) -> int:
         return resp.status
 
 
-class RabbitMQSink(Sink):
+class RabbitMQSink(RecordSink):
     """K6: per-event publish, multiplicative backoff (RabbitMQSink.scala:52-66)."""
 
     def __init__(
@@ -210,9 +193,6 @@ class RabbitMQSink(Sink):
                     self.sleep(backoff / 1000.0)
                     backoff = int(backoff * self.backoff_multiplier)
 
-    def write(self, df: DataFrame, epoch_id: int = 0) -> None:
-        _iter_payloads(df, self.distributed, self._deliver)
-
 
 def _default_pika_factory():
     def factory():
@@ -224,20 +204,3 @@ def _default_pika_factory():
         return conn.channel()
 
     return factory
-
-
-class StdoutJsonSink(Sink):
-    """K7 variant for ops tooling: one JSON line per record to stdout
-    (base64 in the reference, StdoutSink.scala:24-40 — JSON here because
-    the payload is already a JSON string, documented divergence)."""
-
-    def __init__(self, distributed: bool = False):
-        super().__init__()
-        self.distributed = distributed
-
-    def _deliver(self, rows: Iterable) -> None:
-        for r in rows:
-            print(json.dumps({"key": r["partition_key"], "value": r["serialized"]}))
-
-    def write(self, df: DataFrame, epoch_id: int = 0) -> None:
-        _iter_payloads(df, self.distributed, self._deliver)

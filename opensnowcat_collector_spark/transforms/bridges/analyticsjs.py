@@ -38,13 +38,6 @@ def is_analyticsjs(path: Column) -> Column:
     return path.rlike(_SEG_RE)
 
 
-def _event_schema_expr(seg: Column) -> Column:
-    mapping = F.create_map(
-        *[F.lit(x) for k, (_, schema) in SEGMENT_EVENT_SCHEMAS.items() for x in (k, schema)]
-    )
-    return mapping[seg]
-
-
 def disabled(df: DataFrame) -> DataFrame:
     """Bridge switched off (experimental.enableAnalyticsJsBridge=false,
     the reference default): Segment-path requests fall through as plain

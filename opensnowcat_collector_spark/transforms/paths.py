@@ -12,7 +12,7 @@ identical to the Column-built one, only construction gets cheaper
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import CollectorConfig
@@ -38,10 +38,6 @@ _ILLEGAL_QS_RE = "%(?![0-9A-Fa-f]{2})"
 
 #: the same predicate as a SQL fragment over a column reference
 _VALID_QS_FRAG = f"NOT coalesce(querystring, '') rlike {sql_str(_ILLEGAL_QS_RE)}"
-
-
-def valid_querystring(col: Column) -> Column:
-    return ~F.coalesce(col, F.lit("")).rlike(_ILLEGAL_QS_RE)
 
 
 def extract_query_params(df: DataFrame) -> DataFrame:

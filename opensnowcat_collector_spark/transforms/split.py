@@ -15,17 +15,15 @@ reference: SplitBatch.scala:48-113.  Semantics reproduced:
   the sub-array as body; per-element overflow -> SizeViolation("this POST
   request split is still too large").
 
-Size accounting (``SinkConfig.size_accounting``): the default "thrift"
-mode measures the whole event by its serialized-Thrift size — byte-exact
-reference parity (SplitBatch.scala:84-99,147-151; the JVM routing
-expression ``thrift_size_expr`` and the Python ``thrift_codec`` encoder
-agree bit-for-bit).  Element sizes and ``initialBodyDataBytes`` are
-compact-JSON UTF-8 bytes in BOTH modes, exactly like the reference
-(``getSize(Json)`` = noSpaces UTF-8).  The "json" mode sizes the whole
-event by its canonical compact-JSON serialization instead, for sinks that
-ship the JSON serialization as the record.  Batch membership matches the
-reference's walk; batch emission order is input order (the reference
-emits reversed — order is not semantically meaningful for delivery).
+Size accounting: the whole event is measured by its serialized-Thrift
+size — byte-exact reference parity (SplitBatch.scala:84-99,147-151; the
+JVM routing expression ``thrift_size_expr`` and the Python
+``thrift_codec`` encoder agree bit-for-bit).  Element sizes and
+``initialBodyDataBytes`` are compact-JSON UTF-8 bytes, exactly like the
+reference (``getSize(Json)`` = noSpaces UTF-8).  Batch membership
+matches the reference's walk; batch emission order is input order (the
+reference emits reversed — order is not semantically meaningful for
+delivery).
 
 Spark mapping: the whole operator runs inside ``mapInPandas`` on the
 oversized subset only (group = one input payload, embarrassingly parallel,
@@ -48,7 +46,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..config import CollectorConfig
 from ..thrift_codec import FIELDS as _THRIFT_FIELDS
 from ..thrift_codec import encode_collector_payload
 
@@ -118,16 +115,13 @@ def serialize_payload(row: dict) -> str:
     return _compact({k: row.get(k) for k in _PAYLOAD_FIELDS})
 
 
-def payload_size(row: dict, accounting: str) -> int:
-    """Size of a payload under the configured accounting: serialized-Thrift
-    bytes (reference parity) or canonical compact-JSON UTF-8 bytes."""
-    if accounting == "thrift":
-        ts = row.get("timestamp")
-        if ts is not None:
-            row = dict(row)
-            row["timestamp"] = int(ts)
-        return len(encode_collector_payload(row))
-    return _utf8_size(serialize_payload(row))
+def payload_size(row: dict) -> int:
+    """Serialized-Thrift size of a payload (reference parity)."""
+    ts = row.get("timestamp")
+    if ts is not None:
+        row = dict(row)
+        row["timestamp"] = int(ts)
+    return len(encode_collector_payload(row))
 
 
 def thrift_size_expr():
@@ -195,16 +189,14 @@ _IGLU_URI_RE = __import__("re").compile(
 )
 
 
-def split_and_serialize(
-    row: dict, max_bytes: int, accounting: str = "thrift"
-) -> tuple[list[dict], list[dict]]:
+def split_and_serialize(row: dict, max_bytes: int) -> tuple[list[dict], list[dict]]:
     """One payload -> (good rows, bad rows); pure function for unit tests.
 
     Good rows: {'body': new_body or original, 'serialized': str, 'size': int}
     Bad rows: {'expectation': str, 'actual_size': int, 'payload': str}
     """
     whole = serialize_payload(row)
-    whole_bytes = payload_size(row, accounting)
+    whole_bytes = payload_size(row)
     if whole_bytes < max_bytes:
         return [{"body": row.get("body"), "serialized": whole, "size": whole_bytes}], []
 
@@ -236,8 +228,8 @@ def split_and_serialize(
     if not isinstance(data, list):
         return bad("cannot split POST requests which do not contain a data array", whole_bytes)
 
-    # element + initial-data sizes are compact-JSON bytes in BOTH accounting
-    # modes, exactly like the reference (getSize(Json) = noSpaces UTF-8)
+    # element + initial-data sizes are compact-JSON bytes, exactly like
+    # the reference (getSize(Json) = noSpaces UTF-8)
     initial_body_data_bytes = _utf8_size(_compact(data))
     if whole_bytes - initial_body_data_bytes >= max_bytes:
         return bad(
@@ -258,7 +250,7 @@ def split_and_serialize(
             {
                 "body": new_body,
                 "serialized": serialize_payload(new_row),
-                "size": payload_size(new_row, accounting),
+                "size": payload_size(new_row),
             }
         )
     bads = [
@@ -272,12 +264,11 @@ def split_and_serialize(
     return goods, bads
 
 
-def make_split_map_fn(cfg: CollectorConfig, max_bytes: int):
+def make_split_map_fn(max_bytes: int):
     """mapInPandas function over payload rows (only the oversized subset is
     routed here by the pipeline)."""
 
     payload_field_names = set(_PAYLOAD_FIELDS) | {"request_id", "partition_key"}
-    accounting = cfg.good_sink.size_accounting
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -287,7 +278,7 @@ def make_split_map_fn(cfg: CollectorConfig, max_bytes: int):
                 if headers is not None and not isinstance(headers, list):
                     headers = list(headers)
                     rec["headers"] = headers
-                goods, bads = split_and_serialize(rec, max_bytes, accounting)
+                goods, bads = split_and_serialize(rec, max_bytes)
                 base = {k: rec.get(k) for k in payload_field_names}
                 for i, g in enumerate(goods):
                     out_rows.append(

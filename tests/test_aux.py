@@ -212,6 +212,37 @@ def test_main_once_processes_landing_and_exits(tmp_path, capsys, monkeypatch):
     assert "encoding" in decoded
 
 
+def test_main_without_config_uses_reference_defaults(tmp_path, monkeypatch):
+    """python -m opensnowcat_collector_spark without --config runs on the
+    reference defaults (REFERENCE_DEFAULTS: secure, HttpOnly,
+    SameSite=None cookie; the v4 bounce fallback nuid), the same base
+    every loaded config starts from — not on the bare dataclass fields."""
+    import pytest
+
+    from opensnowcat_collector_spark import __main__ as M
+    from opensnowcat_collector_spark.config_loader import load_collector_config
+
+    class _Stop(Exception):
+        pass
+
+    seen = {}
+
+    def fake_collector(spark, cfg, good, bad):
+        seen["cfg"] = cfg
+        raise _Stop
+
+    monkeypatch.setattr(M, "get_spark", lambda **kw: None)
+    monkeypatch.setattr(M, "build_sink", lambda sink_cfg, name: None)
+    monkeypatch.setattr(M, "StreamingCollector", fake_collector)
+    with pytest.raises(_Stop):
+        M.main(["--once", "--landing", str(tmp_path / "l"), "--checkpoint", str(tmp_path / "c")])
+    cfg = seen["cfg"]
+    assert cfg.cookie.secure is True and cfg.cookie.http_only is True
+    assert cfg.cookie.same_site == "None"
+    assert cfg.cookie_bounce.fallback_network_user_id == "00000000-0000-4000-A000-000000000000"
+    assert cfg == load_collector_config(text="")
+
+
 def test_main_stream_names_from_hocon(tmp_path):
     from opensnowcat_collector_spark.__main__ import _stream_names
 

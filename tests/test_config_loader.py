@@ -73,6 +73,10 @@ def test_defaults_only():
     assert cfg.redirect_domains == ()
 
 
+def test_no_source_is_reference_defaults():
+    assert load_collector_config() == load_collector_config(text="")
+
+
 def test_durations():
     assert parse_duration_ms("365 days") == 365 * 24 * 3600 * 1000
     assert parse_duration_ms("10.seconds") == 10000

@@ -165,26 +165,92 @@ def test_ensure_bucketed_tables_refuses_unpublished_layout(spark, tmp_path):
 
 
 def test_publish_index_reraises_real_rename_failures(tmp_path):
-    """_publish_index must only swallow a rename failure when a concurrent
+    """publish_atomic must only swallow a rename failure when a concurrent
     winner's _SUCCESS marker exists; anything else re-raises."""
     import os
 
     import pytest
 
-    from opensnowcat_collector_spark.engine.llmdata.similarity import _publish_index
+    from opensnowcat_collector_spark.engine.tables import publish_atomic
 
     src = str(tmp_path / "build")
     os.makedirs(src)
     # destination parent missing -> ENOENT, no winner marker -> re-raise
     with pytest.raises(OSError):
-        _publish_index(src, str(tmp_path / "no_parent" / "idx"))
+        publish_atomic(src, str(tmp_path / "no_parent" / "idx"), "_SUCCESS")
     assert os.path.exists(src)  # build not discarded on a real failure
     # concurrent winner present -> swallowed, ours discarded
     dest = str(tmp_path / "idx")
     os.makedirs(dest)
     open(os.path.join(dest, "_SUCCESS"), "w").close()
-    _publish_index(src, dest)
+    publish_atomic(src, dest, "_SUCCESS")
     assert not os.path.exists(src)
+
+
+def test_build_once_contract(tmp_path):
+    """The artifact store's publish rule, without Spark: build once and
+    serve the published artifact after; ``rebuild`` replaces it; a tmp
+    left by a crashed build is never published; a real rename failure
+    re-raises with the tmp build left on disk."""
+    import os
+
+    import pytest
+
+    from opensnowcat_collector_spark.engine.tables import build_once
+
+    path = str(tmp_path / "art")
+    tmp = f"{path}.build-{os.getpid()}"
+    calls = []
+
+    def write(label):
+        def w(d):
+            calls.append(label)
+            os.makedirs(d)
+            with open(os.path.join(d, "data"), "w") as f:
+                f.write(label)
+
+        return w
+
+    def content():
+        with open(os.path.join(path, "data")) as f:
+            return f.read()
+
+    # a crashed build left a partial tmp behind: it is cleared, not published
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "partial"), "w") as f:
+        f.write("junk")
+    assert build_once(path, write("v1")) == path
+    assert calls == ["v1"] and content() == "v1"
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(path, "partial"))
+    assert not os.path.exists(tmp)
+
+    # a second call serves the published artifact without running write
+    assert build_once(path, write("v2")) == path
+    assert calls == ["v1"] and content() == "v1"
+
+    # rebuild replaces the published artifact
+    assert build_once(path, write("v3"), rebuild=True) == path
+    assert calls == ["v1", "v3"] and content() == "v3"
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+
+    # the marker is per caller: another marker name means unpublished
+    other = str(tmp_path / "layout")
+    build_once(other, write("L"), marker="_LAYOUT_SUCCESS")
+    assert os.path.exists(os.path.join(other, "_LAYOUT_SUCCESS"))
+    assert not os.path.exists(os.path.join(other, "_SUCCESS"))
+
+    # a real rename failure (a non-empty destination with no marker)
+    # re-raises and keeps the fresh build on disk for inspection
+    foreign = str(tmp_path / "foreign")
+    os.makedirs(foreign)
+    with open(os.path.join(foreign, "stray"), "w") as f:
+        f.write("x")
+    with pytest.raises(OSError):
+        build_once(foreign, write("F"))
+    kept = f"{foreign}.build-{os.getpid()}"
+    assert os.path.exists(os.path.join(kept, "data"))
+    assert os.path.exists(os.path.join(kept, "_SUCCESS"))
 
 
 # ---------------------------------------------------------------------------

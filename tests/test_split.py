@@ -93,7 +93,7 @@ def test_oversized_get_cannot_be_split():
     goods, bads = split_and_serialize(p, 400)
     assert not goods and len(bads) == 1
     assert bads[0]["expectation"] == "GET requests cannot be split"
-    assert bads[0]["actual_size"] == payload_size(p, "thrift")
+    assert bads[0]["actual_size"] == payload_size(p)
     # payload truncated to a tenth of the max
     assert len(bads[0]["payload"]) == 400 // 10
 
@@ -129,7 +129,7 @@ def test_split_three_good_four_bad():
     huge = [{"e": "pv", "blob": "z" * 2000} for _ in range(4)]
     body = _compact({"schema": "iglu:com.acme/ev/jsonschema/1-0-0", "data": small + huge})
     p = _payload(body=body)
-    assert payload_size(p, "thrift") > 800
+    assert payload_size(p) > 800
     goods, bads = split_and_serialize(p, 800)
     assert len(bads) == 4
     assert all(b["expectation"] == "this POST request split is still too large" for b in bads)
@@ -209,7 +209,7 @@ def test_pipeline_split_oversized(spark):
     # and the JVM routing size must match the Thrift encoder exactly
     r0 = by_req["req-0000"][0].asDict()
     assert r0["serialized"] == serialize_payload(r0)
-    assert r0["serialized_size"] == payload_size(r0, "thrift")
+    assert r0["serialized_size"] == payload_size(r0)
 
 
 def test_split_no_cross_match_on_shared_request_id(spark):
@@ -272,7 +272,7 @@ def test_thrift_spec_oversized_get_1019():
     """SplitBatchSpec 'Reject an oversized GET': querystring of 1000 x's on
     an otherwise-empty payload serializes to exactly 1019 Thrift bytes."""
     p = {"querystring": "x" * 1000, "timestamp": 0}
-    goods, bads = split_and_serialize(p, 100, accounting="thrift")
+    goods, bads = split_and_serialize(p, 100)
     assert not goods and len(bads) == 1
     assert bads[0]["expectation"] == "GET requests cannot be split"
     assert bads[0]["actual_size"] == 1019
@@ -283,7 +283,7 @@ def test_thrift_spec_unparseable_body_1019():
     """SplitBatchSpec 'unparseable body': body of 1000 s's -> 1019 Thrift
     bytes, not-json rejection."""
     p = {"body": "s" * 1000, "timestamp": 0}
-    goods, bads = split_and_serialize(p, 100, accounting="thrift")
+    goods, bads = split_and_serialize(p, 100)
     assert not goods and len(bads) == 1
     assert bads[0]["expectation"].startswith(
         "cannot split POST requests which are not json"
@@ -302,7 +302,7 @@ def test_thrift_spec_invalid_iglu_uri_1091():
         }
     )
     p = {"body": body, "path": "p" * 1000, "timestamp": 0}
-    goods, bads = split_and_serialize(p, 1000, accounting="thrift")
+    goods, bads = split_and_serialize(p, 1000)
     assert not goods and len(bads) == 1
     assert bads[0]["expectation"].startswith(
         "cannot split POST requests which are not self-describing"
@@ -324,7 +324,7 @@ def test_thrift_spec_two_good_four_bad():
         {"e": "se", "tv": "y" * 1000},
     ]
     p = {"body": _compact({"schema": uri, "data": data}), "timestamp": 0}
-    goods, bads = split_and_serialize(p, 1000, accounting="thrift")
+    goods, bads = split_and_serialize(p, 1000)
     assert len(goods) == 2
     assert len(bads) == 4
     assert all(
@@ -371,7 +371,7 @@ def test_thrift_size_expr_matches_codec(spark):
     )
     df = spark.createDataFrame(rows, schema)
     got = [r[0] for r in df.select(thrift_size_expr()).collect()]
-    want = [payload_size(r, "thrift") for r in rows]
+    want = [payload_size(r) for r in rows]
     assert got == want
 
 
@@ -388,7 +388,6 @@ def test_collector_split_accounting_oracle_constants():
     from opensnowcat_collector_spark.thrift_codec import encode_collector_payload
 
     assert _SPLIT_CFG.good_sink.max_bytes == 700
-    assert _SPLIT_CFG.good_sink.size_accounting == "thrift"
     tag = _SPLIT_CFG.collector_tag
     uid = 1234
     qs = f"e=pv&nuid=u-{uid}"

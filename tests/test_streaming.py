@@ -793,9 +793,7 @@ def test_source_fingerprint_walks_directory_part_files(tmp_path):
     import os
     import shutil
 
-    from opensnowcat_collector_spark.engine.llmdata.similarity import (
-        _source_fingerprint,
-    )
+    from opensnowcat_collector_spark.engine.tables import _source_fingerprint
 
     d = tmp_path / "documents.parquet"
     d.mkdir()
@@ -882,3 +880,44 @@ def test_fuzzy_forced_rebuild_replaces_artifact(spark, tmp_path):
     assert rebuilt == path
     assert not os.path.exists(marker), "forced rebuild kept the corrupt artifact"
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def test_kn_forced_rebuild_replaces_artifact(spark, tmp_path):
+    """SPARK_GRAFT_KN_REBUILD=1 must REPLACE an existing KN count-table
+    artifact, like the fuzzy flag: a corrupted-yet-_SUCCESS-marked
+    artifact is recoverable (the fresh build used to land in tmp and be
+    discarded because the marked destination counted as a concurrent
+    winner)."""
+    import os
+
+    import duckdb
+
+    from opensnowcat_collector_spark.engine.llmdata.text import (
+        build_kn,
+        build_kn_trigram,
+        kn_path,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT range AS doc_id,"
+        " 'alpha beta gamma delta epsilon zeta eta theta' AS text,"
+        " 'en' AS lang, 's' AS source, 40 AS n_chars FROM range(40)"
+    )
+    con.execute(f"COPY documents TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)")
+    for build, tag, table_name in ((build_kn, "kn2", "bgf"), (build_kn_trigram, "kn3", "tgf")):
+        path = build(spark, str(tmp_path))
+        assert path == kn_path(str(tmp_path), tag)
+        # corrupt a table but keep the _SUCCESS marker
+        sentinel = os.path.join(path, table_name, "_corrupt_sentinel")
+        with open(sentinel, "w", encoding="utf-8") as fh:
+            fh.write("junk")
+        os.environ["SPARK_GRAFT_KN_REBUILD"] = "1"
+        try:
+            rebuilt = build(spark, str(tmp_path))
+        finally:
+            os.environ.pop("SPARK_GRAFT_KN_REBUILD", None)
+        assert rebuilt == path
+        assert not os.path.exists(sentinel), f"{tag}: forced rebuild kept the corrupt artifact"
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
+        assert not os.path.exists(f"{path}.build-{os.getpid()}")
