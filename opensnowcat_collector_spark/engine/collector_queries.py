@@ -292,9 +292,6 @@ FROM events
 GROUP BY 1, 2
 """
 
-_STREAM_Q_SEQ = [0]
-
-
 @register("streaming_hourly_rollup", oracle=_STREAMING_ROLLUP_ORACLE)
 def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events replayed through a REAL streaming query: parquet file
@@ -302,20 +299,11 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (availableNow drains everything, so the complete result equals the
     batch rollup and the DuckDB oracle).  This puts the Structured
     Streaming execution path itself under the correctness gate."""
-    import tempfile
+    from .streaming_queries import _drain_to_memory, _events_stream
 
-    from .streaming_queries import ROCKSDB_PROVIDER, _stream_table
-    from .tables import normalize_event_ts
-
-    # match _drain_to_memory: the driver's bare session must run the
-    # graded streaming path on the production RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    batch = table(spark, sf_dir, "events")
-    src = normalize_event_ts(_stream_table(spark, sf_dir, "events"))
-    _STREAM_Q_SEQ[0] += 1
-    qname = f"stream_rollup_{_STREAM_Q_SEQ[0]}"
     agg = (
-        src.withWatermark("ts", "1 hour")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -324,29 +312,7 @@ def streaming_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_value"),
         )
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_rollup_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    from .streaming_queries import _await_drain
-
-    try:
-        _await_drain(q, "streaming_hourly_rollup")
-    finally:
-        # same no-leak discipline as streaming_queries._drain_to_memory:
-        # RocksDB state files per run would otherwise accumulate in /tmp
-        # forever across sweep/bench/driver rounds
-        if not q.isActive:
-            import shutil
-
-            shutil.rmtree(ckpt, ignore_errors=True)
-    assert batch is not None  # keep the batch loader exercised for schema parity
-    return spark.table(qname).select(
+    return _drain_to_memory(agg, "complete").select(
         F.col("w.start").alias("hour_start"),
         "event_type",
         "n_events",

@@ -29,6 +29,8 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2711,23 +2713,18 @@ def dedup_source_order_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         rows.append((len(rows) + 1, src, -neg_mass))
         picked.add(src)
-    # Result assembly: a parsed VALUES literal costs one py4j round-trip
-    # (~50 ms) where createDataFrame pays schema plumbing + conversion
-    # (~350 ms measured on this VM for these <= 32 rows — optimization
-    # r15, the sqlfrag driver-overhead class).  Rows are identical;
-    # column names/types unchanged.  Fall back to createDataFrame when
-    # a source name can't be embedded as a SQL literal (sql_str rejects
-    # '${' — ADVICE r14's substitution hazard) or when the plan is
-    # empty (no duplicate mass anywhere).
-    from ...sqlfrag import sql_str
+    return _source_order_frame(spark, rows)
 
-    if rows and all("${" not in src for _, src, _ in rows):
-        vals = ", ".join(
-            f"({step}, {sql_str(src)}, CAST({marginal} AS BIGINT))"
-            for step, src, marginal in rows
-        )
-        return spark.sql(f"SELECT * FROM VALUES {vals} AS t(step, source, marginal)")
-    return spark.createDataFrame(rows, "step int, source string, marginal long")
+
+def _source_order_frame(spark: SparkSession, rows: list[tuple[int, str, int]]) -> DataFrame:
+    """The (step, source, marginal) rows bound as one JSON parameter: no
+    source name in the SQL text (no ``${`` substitution hazard), and one
+    nullable schema for any names and for no rows at all."""
+    return spark.sql(
+        "SELECT inline(from_json(:rows, "
+        "'array<struct<step:int,source:string,marginal:bigint>>'))",
+        args={"rows": json.dumps([{"step": k, "source": s, "marginal": m} for k, s, m in rows])},
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -761,55 +761,38 @@ def streaming_latest_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _drain_foreachbatch(
     stream, transform, cols, what: str, prefix: str, *, merge_latest: bool = False
 ) -> DataFrame:
-    """Run ``stream`` through ``foreachBatch`` with the epoch-overwrite
-    exactly-once recipe and return what actually landed: each micro-batch
-    is passed through ``transform`` and written to a parquet target
-    partitioned by ``epoch=<id>`` with per-epoch ``overwrite`` (a replayed
-    epoch after a crash overwrites its own directory instead of
-    duplicating rows; Spark guarantees the same epoch_id re-presents the
-    same data under availableNow + checkpoint).
+    """Run ``stream`` through ``foreachBatch`` into a ``ParquetSink``
+    (one directory per epoch, overwritten whole, so a replayed epoch
+    never duplicates rows) and return what actually landed.
 
     ``merge_latest=False`` (default): ``transform(batch_df)`` and the
-    read-back unions ALL epoch directories — the per-record sink shape.
+    read-back unions ALL epochs — the per-record sink shape.
 
     ``merge_latest=True``: the STATEFUL snapshot-chain shape.
-    ``transform(batch_df, prev)`` also receives the previous epoch's
-    snapshot frame (None on the first epoch), and the read-back returns
-    only the LATEST snapshot.  Crash-safe by construction: a replayed
-    epoch k reads the newest snapshot with id < k, so a partial write of
-    epoch k itself is never consumed — it is simply overwritten whole.
-    Superseded snapshots are bounded breadcrumbs removed with the target.
+    ``transform(batch_df, prev)`` also receives the newest snapshot below
+    the current epoch (None on the first epoch), and the read-back returns
+    only the LATEST snapshot.  A replayed epoch k reads the newest
+    snapshot below k, so its own torn write is never consumed.
 
-    Shared by every foreachBatch gate so the recipe's invariants (rmtree
+    Shared by every foreachBatch gate so the drain discipline (rmtree
     before start, stop the stream before deleting its checkpoint, eager
-    localCheckpoint of the read-back before the target vanishes) live in
+    localCheckpoint of the read-back before the target vanishes) lives in
     exactly one place."""
     import shutil
+
+    from ..sinks.files import ParquetSink
 
     spark = stream.sparkSession
     target = tempfile.mkdtemp(prefix=prefix)
     shutil.rmtree(target)  # foreachBatch creates it
-
-    def _snapshot_dir(before_epoch: float) -> str | None:
-        if not os.path.isdir(target):
-            return None
-        ids = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(target)
-            if d.startswith("epoch=") and int(d.split("=", 1)[1]) < before_epoch
-        ]
-        return os.path.join(target, f"epoch={max(ids)}") if ids else None
+    sink = ParquetSink(target)
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         if merge_latest:
-            prev_dir = _snapshot_dir(epoch_id)
-            prev = spark.read.parquet(prev_dir) if prev_dir else None
-            out = transform(batch_df, prev)
+            out = transform(batch_df, sink.read(spark, newest_below=epoch_id))
         else:
             out = transform(batch_df)
-        out.write.mode("overwrite").parquet(
-            os.path.join(target, f"epoch={epoch_id}")
-        )
+        sink.write(out, epoch_id)
 
     ckpt = tempfile.mkdtemp(prefix=f"ckpt_gate_{prefix}")
     q = None
@@ -821,8 +804,8 @@ def _drain_foreachbatch(
             .start()
         )
         _await_drain(q, what)
-        src = _snapshot_dir(float("inf")) if merge_latest else target
-        return spark.read.parquet(src).select(*cols).localCheckpoint()
+        landed = sink.read(spark, newest_below=float("inf") if merge_latest else None)
+        return landed.select(*cols).localCheckpoint()
     finally:
         # Stop before deleting the checkpoint: a non-timeout exception
         # between start() and drain (interrupt, read-back failure) must
@@ -842,14 +825,12 @@ FROM events
 )
 def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production sink API under the gate: ``foreachBatch`` writes
-    each micro-batch to a parquet target partitioned by ``epoch=<id>``
-    with per-epoch ``overwrite`` — Structured Streaming's standard
-    exactly-once recipe (a replayed epoch after a crash overwrites its
-    own directory instead of duplicating rows; Spark guarantees the same
-    epoch_id re-presents the same data under availableNow + checkpoint).
-    Every other streaming gate drains to the memory sink; this one
-    grades the foreachBatch path end-to-end — batch-function execution,
-    epoch partitioning, and the read-back of what actually landed.
+    each micro-batch through ``sinks.files.ParquetSink``, the collector's
+    exactly-once file sink (its docstring states the layout and the
+    guarantee).  Every other streaming gate drains to the memory sink;
+    this one grades the foreachBatch path end-to-end — batch-function
+    execution, the sink's epoch layout, and the read-back of what
+    actually landed.
 
     The returned frame is localCheckpoint'd so the scratch target can be
     removed before the driver collects — on EVERY exit path, success or
@@ -1076,7 +1057,7 @@ def streaming_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Crash safety comes from the snapshot CHAIN (the drain helper's
     ``merge_latest`` shape): epoch k writes its reservoir to its own
-    ``epoch=k`` directory and a replayed epoch k re-reads the newest
+    epoch directory and a replayed epoch k re-reads the newest
     snapshot with id < k, so a torn partial write of epoch k is never
     consumed — it is overwritten whole.  No idempotence caveats: a doc_id
     duplicated in the corpus ranks twice here exactly as it does in the

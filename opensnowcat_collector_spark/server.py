@@ -102,7 +102,9 @@ class LandingWriter:
 
     Time-based rotation (a daemon thread) bounds visibility latency under
     low traffic — without it a trickle of requests would sit invisible in
-    the staging file until the row-count threshold."""
+    the staging file until the row-count threshold.  Files are named
+    ``requests-<random token per writer>-<seq from 0>.json``, so a restarted
+    receiver (the same PID again, PID 1 in a container) never replaces one."""
 
     def __init__(self, landing_dir: str, rotate_rows: int = 1000,
                  rotate_secs: float = 2.0):
@@ -116,6 +118,7 @@ class LandingWriter:
         self._lock = threading.Lock()
         self._rows = 0
         self._seq = 0
+        self._token = uuid.uuid4().hex[:12]
         self._fh = None
         self._staging_path: str | None = None
         self._opened_at = 0.0
@@ -124,7 +127,7 @@ class LandingWriter:
         self._timer.start()
 
     def _open(self):
-        name = f"requests-{os.getpid()}-{self._seq:06d}.json"
+        name = f"requests-{self._token}-{self._seq:06d}.json"
         self._staging_path = os.path.join(self.staging_dir, name)
         self._fh = open(self._staging_path, "a", encoding="utf-8")
         self._opened_at = time.monotonic()

@@ -8,7 +8,10 @@ re-expressed for Spark micro-batches: a sink is an object with
 
 Structured Streaming checkpointing upgrades the reference's at-least-once-
 with-edge-loss delivery to at-least-once (exactly-once into idempotent /
-transactional sinks) — SURVEY §4.1.
+transactional sinks) — SURVEY §4.1.  ``ParquetSink`` is such a sink: each
+micro-batch overwrites its own epoch directory under its query's run
+directory (``files.py``), so replays and retries land once and a new
+checkpoint adds a run.  It refuses a path in the old flat append layout.
 """
 
 from .base import BackoffPolicy, CircuitBreaker, RetryingSink, Sink, SinkHealth

@@ -701,6 +701,22 @@ def test_source_order_plan_bounded_pull_and_contiguous_steps(spark, sf_dir, monk
         registry.all_queries()["dedup_source_order_plan"](spark, sf_dir)
 
 
+def test_source_order_frame_one_schema(spark, sf_dir):
+    """The dedup-order result has one assembly path: plain source names,
+    a name containing ``${`` (never substituted: it is bound, not spliced
+    into the SQL text) and an empty plan all give the query's schema."""
+    from opensnowcat_collector_spark.engine.llmdata.dedup import _source_order_frame
+
+    plain = [(1, "a.example", 7), (2, "b'quote", 3)]
+    hazard = [(1, "x${spark.app.name}y", 2)]
+    frames = [_source_order_frame(spark, rows) for rows in (plain, hazard, [])]
+    query = registry.all_queries()["dedup_source_order_plan"](spark, sf_dir)
+    assert all(f.schema == query.schema for f in frames), [f.schema for f in frames]
+    assert [tuple(r) for r in frames[0].collect()] == plain
+    assert [tuple(r) for r in frames[1].collect()] == hazard
+    assert frames[2].count() == 0
+
+
 def test_fuzzy_contamination_jvm_levenshtein_broadcast_bench(spark, sf_dir):
     """Fuzzy decontamination (r9): the edit-distance verify must be
     Spark's built-in JVM levenshtein (never a Python stage), the

@@ -679,3 +679,30 @@ def test_stalled_connections_do_not_delay_others(tmp_path, monkeypatch):
         for sock in silent:
             sock.close()
         srv.stop()
+
+
+def test_landing_names_unique_across_writers(tmp_path):
+    """A restarted receiver (the same PID again, PID 1 in a container)
+    numbers its files from 0 once more; its files must not replace the
+    ones an earlier writer published into the same landing dir."""
+    import glob
+    import os
+
+    from opensnowcat_collector_spark.server import LandingWriter
+
+    landing = str(tmp_path / "landing")
+    first = LandingWriter(landing, rotate_rows=1000, rotate_secs=3600)
+    first.append({"n": 0})
+    first.close()
+    second = LandingWriter(landing, rotate_rows=1000, rotate_secs=3600)
+    second.append({"n": 1})
+    second.append({"n": 2})
+    second.close()
+
+    files = glob.glob(os.path.join(landing, "*.json"))
+    assert len(files) == 2 and all(f.endswith("-000000.json") for f in files), files
+    rows = []
+    for f in files:
+        with open(f) as fh:
+            rows.extend(json.loads(line)["n"] for line in fh)
+    assert sorted(rows) == [0, 1, 2]

@@ -12,6 +12,7 @@ from opensnowcat_collector_spark.sinks.base import (
     CircuitBreaker,
     RetryingSink,
 )
+from opensnowcat_collector_spark.sinks.files import ParquetSink
 from opensnowcat_collector_spark.sinks.memory import MemorySink
 
 
@@ -83,6 +84,75 @@ def test_retrying_sink_raises_without_backup(spark):
     )
     with pytest.raises(RuntimeError, match="sink delivery failed"):
         sink.write(df)
+
+
+def _ids(df) -> list[int]:
+    return sorted(r.id for r in df.select("id").collect())
+
+
+def test_parquet_sink_rewritten_epoch_replaces_its_rows(spark, tmp_path):
+    """A replayed epoch overwrites its own directory: the read-back is
+    epoch 0 plus the newest write of epoch 1, never both writes of it."""
+    sink = ParquetSink(str(tmp_path / "good"))
+    sink.write(spark.range(0, 3), 0)
+    sink.write(spark.range(10, 12), 1)
+    sink.write(spark.range(20, 24), 1)
+    got = sink.read(spark)
+    assert _ids(got) == [0, 1, 2, 20, 21, 22, 23]
+    assert sorted(r.epoch for r in got.select("epoch").distinct().collect()) == [0, 1]
+
+
+def test_parquet_sink_newest_below_ignores_epoch_k(spark, tmp_path):
+    """The snapshot a replayed epoch k reads is the newest one below k,
+    never a (possibly torn) write of k itself."""
+    sink = ParquetSink(str(tmp_path / "snap"))
+    assert sink.read(spark, newest_below=0) is None  # nothing written yet
+    sink.write(spark.range(0, 2), 0)
+    sink.write(spark.range(10, 12), 2)
+    sink.write(spark.range(20, 22), 3)
+    assert _ids(sink.read(spark, newest_below=3)) == [10, 11]
+    assert _ids(sink.read(spark, newest_below=2)) == [0, 1]
+    assert _ids(sink.read(spark, newest_below=float("inf"))) == [20, 21]
+    assert sink.read(spark, newest_below=0) is None
+
+
+def test_parquet_sink_refuses_flat_layout_path(spark, tmp_path):
+    """Part files directly under the path (the old flat append layout)
+    would break partition discovery of every row: the sink refuses the
+    path instead of writing next to them."""
+    path = str(tmp_path / "good")
+    spark.range(3).write.parquet(path)
+    with pytest.raises(ValueError, match="new path"):
+        ParquetSink(path)
+    sink = ParquetSink(str(tmp_path / "fresh"))
+    sink.write(spark.range(2), 0)
+    ParquetSink(sink.path)  # its own layout is accepted
+
+
+def test_retrying_parquet_sink_lands_batch_once(spark, tmp_path):
+    """A write that lands and then fails (a lost acknowledgement) is
+    retried; the retry overwrites the epoch, so the batch lands once."""
+
+    class WriteThenFail(ParquetSink):
+        attempts = 0
+
+        def write(self, df, epoch_id=0):
+            super().write(df, epoch_id)
+            self.attempts += 1
+            if self.attempts == 1:
+                raise OSError("acknowledgement lost")
+
+    path = str(tmp_path / "good")
+    primary = WriteThenFail(path)
+    sink = RetryingSink(
+        primary,
+        policy=BackoffPolicy(min_backoff_ms=1, max_backoff_ms=2, max_retries=3),
+        rng=random.Random(7),
+        sleep=lambda s: None,
+    )
+    sink.write(spark.range(5), 4)
+    assert primary.attempts == 2
+    assert _ids(spark.read.parquet(path)) == [0, 1, 2, 3, 4]
 
 
 def test_health_probe_flips_and_recovers():

@@ -7,11 +7,14 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from opensnowcat_collector_spark.config import CollectorConfig, SinkConfig
+from opensnowcat_collector_spark.sinks.base import Sink
+from opensnowcat_collector_spark.sinks.files import ParquetSink
 from opensnowcat_collector_spark.sinks.memory import MemorySink
 from opensnowcat_collector_spark.streaming.job import StreamingCollector
 
@@ -517,6 +520,112 @@ def test_streaming_matches_batch_pipeline(spark, tmp_path):
     assert sum(r["request_id"] == "req-0004" for r in want_good) == 2
     assert _canonical(good.rows) == _canonical(want_good)
     assert _canonical(bad.rows) == _canonical(want_bad)
+
+
+class _CrashOnce(Sink):
+    """Delegates to ``inner`` but raises once, on ``epoch``, either
+    before or after the delegated write: a process dying at that point
+    of the micro-batch."""
+
+    def __init__(self, inner, epoch: int, after: bool):
+        super().__init__()
+        self.inner, self.epoch, self.after, self.fired = inner, epoch, after, False
+
+    def write(self, df, epoch_id=0):
+        crash = epoch_id == self.epoch and not self.fired
+        if self.after or not crash:
+            self.inner.write(df, epoch_id)
+        if crash:
+            self.fired = True
+            raise RuntimeError("injected crash")
+
+
+@pytest.mark.parametrize(
+    "point", ["before_good_write", "between_good_and_bad", "after_bad_before_commit"]
+)
+def test_collector_replay_after_crash_exactly_once(spark, tmp_path, point):
+    """A micro-batch that dies at any point is replayed from the
+    checkpoint on restart, into the same ``ParquetSink`` dirs: good and
+    bad rows end up exactly those of ``run(route(raw))``, none lost and
+    none twice (the sink overwrites the replayed epoch)."""
+    from opensnowcat_collector_spark import pipeline
+    from opensnowcat_collector_spark.schema import RAW_REQUEST_SCHEMA
+
+    landing = str(tmp_path / "landing")
+    for b in range(3):
+        _write_landing(landing, _mixed_requests(100 * b), name=f"batch{b}.json")
+    cfg = CollectorConfig(
+        deterministic_now_ms=1705320000000,
+        good_sink=SinkConfig(max_bytes=1500),
+        enable_analyticsjs_bridge=True,
+        enable_amplitude_bridge=True,
+    )
+    good_dir, bad_dir = str(tmp_path / "good"), str(tmp_path / "bad")
+    good, bad = ParquetSink(good_dir), ParquetSink(bad_dir)
+    if point == "before_good_write":
+        good = _CrashOnce(good, epoch=1, after=False)
+    elif point == "between_good_and_bad":
+        good = _CrashOnce(good, epoch=1, after=True)
+    else:
+        bad = _CrashOnce(bad, epoch=1, after=True)
+    job = StreamingCollector(spark, cfg, good, bad)
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        return job.start(
+            job.source_from_files(landing, max_files_per_trigger=1), ckpt, available_now=True
+        )
+
+    q = drain()
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination(180)
+    q = drain()  # restart on the same checkpoint and sink dirs
+    q.awaitTermination(180)
+    assert q.exception() is None
+
+    raw = spark.read.schema(RAW_REQUEST_SCHEMA).json(landing)
+    want = pipeline.run(pipeline.route(raw, cfg), cfg)
+    got_good = spark.read.parquet(good_dir)
+    assert got_good.select("run").distinct().count() == 1  # the restart resumed the run
+    got_good = got_good.drop("run", "epoch").collect()
+    got_bad = spark.read.parquet(bad_dir).drop("run", "epoch").collect()
+    want_good, want_bad = want.good.collect(), want.bad.collect()
+    count = lambda rows: sorted(Counter(r["request_id"] for r in rows).items())
+    assert count(got_good) == count(want_good)
+    assert _canonical(got_good) == _canonical(want_good)
+    assert _canonical(got_bad) == _canonical(want_bad)
+
+
+def test_collector_new_checkpoint_keeps_earlier_runs(spark, tmp_path):
+    """A collector restarted with a new checkpoint numbers its batches
+    from 0 again; into the same ``ParquetSink`` dirs it must add its
+    rows next to the earlier run's, never overwrite them."""
+    from opensnowcat_collector_spark import pipeline
+    from opensnowcat_collector_spark.schema import RAW_REQUEST_SCHEMA
+
+    cfg = CollectorConfig(deterministic_now_ms=1705320000000)
+    good_dir, bad_dir = str(tmp_path / "good"), str(tmp_path / "bad")
+    landings = [str(tmp_path / "landing_a"), str(tmp_path / "landing_b")]
+    for b in range(2):
+        _write_landing(landings[0], _mixed_requests(100 * b), name=f"batch{b}.json")
+    _write_landing(landings[1], _mixed_requests(200), name="batch0.json")
+    for i, landing in enumerate(landings):
+        job = StreamingCollector(spark, cfg, ParquetSink(good_dir), ParquetSink(bad_dir))
+        q = job.start(
+            job.source_from_files(landing, max_files_per_trigger=1),
+            str(tmp_path / f"ckpt{i}"),
+            available_now=True,
+        )
+        q.awaitTermination(180)
+        assert q.exception() is None
+
+    raw = spark.read.schema(RAW_REQUEST_SCHEMA).json(landings)
+    want = pipeline.run(pipeline.route(raw, cfg), cfg)
+    got_good = spark.read.parquet(good_dir)
+    assert got_good.select("run").distinct().count() == 2
+    got_bad = spark.read.parquet(bad_dir).drop("run", "epoch").collect()
+    assert _canonical(got_good.drop("run", "epoch").collect()) == _canonical(want.good.collect())
+    assert _canonical(got_bad) == _canonical(want.bad.collect())
 
 
 def test_streaming_generated_ids_unique_across_batches(spark, tmp_path):
