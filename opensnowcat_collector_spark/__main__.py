@@ -10,6 +10,10 @@ per-flavor mains.
     python -m opensnowcat_collector_spark --config collector.hocon \
         --landing /data/landing --checkpoint /data/ckpt --port 8080
 
+Without ``--checkpoint``, a ``--landing`` dir keeps its checkpoint next
+to it (``<landing>.checkpoint``), so a restart resumes where the last
+run stopped; only a run with neither option uses temp dirs.
+
 ``--once`` processes everything currently in the landing zone
 (availableNow trigger) and exits — the batch/backfill mode.  Without it
 the process serves until SIGINT/SIGTERM, then drains: /health flips
@@ -50,7 +54,11 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="opensnowcat-collector-spark")
     ap.add_argument("--config", help="HOCON collector config file")
     ap.add_argument("--landing", help="landing-zone dir (default: temp dir)")
-    ap.add_argument("--checkpoint", help="streaming checkpoint dir (default: temp dir)")
+    ap.add_argument(
+        "--checkpoint",
+        help="streaming checkpoint dir (default: <landing>.checkpoint with"
+        " --landing, else a temp dir)",
+    )
     ap.add_argument("--host", default="127.0.0.1")
     ap.add_argument("--port", type=int, default=8080)
     ap.add_argument("--master", default="local[*]", help="Spark master")
@@ -63,7 +71,14 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg: CollectorConfig = load_collector_config(args.config)
     landing = args.landing or tempfile.mkdtemp(prefix="collector-landing-")
-    checkpoint = args.checkpoint or tempfile.mkdtemp(prefix="collector-ckpt-")
+    # the checkpoint remembers which landing files were delivered, so a
+    # kept landing dir keeps its checkpoint next to it: a restart resumes
+    # instead of landing every row again
+    checkpoint = args.checkpoint or (
+        args.landing.rstrip("/\\") + ".checkpoint"
+        if args.landing
+        else tempfile.mkdtemp(prefix="collector-ckpt-")
+    )
     good_name, bad_name = _stream_names(args.config)
 
     spark = get_spark(app_name=cfg.app_name, master=args.master)

@@ -9,12 +9,23 @@ belong to the thin receiver, not the engine.
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass, field
 
 ZERO_UUID = "00000000-0000-0000-0000-000000000000"
 PAYLOAD_DATA_SCHEMA = "iglu:com.snowplowanalytics.snowplow/payload_data/jsonschema/1-0-4"
 COLLECTOR_PAYLOAD_SCHEMA = "iglu:com.snowplowanalytics.snowplow/CollectorPayload/thrift/1-0-0"
+
+
+def request_uuid(request_id: str) -> str:
+    """The v4-shaped UUID the pipeline derives from ``request_id`` for a
+    new network user id or partition key (``transforms.identity``): the
+    receiver, which imports no transforms, sets the same nuid in its
+    Set-Cookie."""
+    h = hashlib.md5(request_id.encode("utf-8")).hexdigest()
+    return f"{h[0:8]}-{h[8:12]}-4{h[13:16]}-8{h[17:20]}-{h[20:32]}"
+
 
 #: event endpoints served by the collector (SURVEY §2.1); anything else is
 #: an ops endpoint or 404 and produces no event.  Read by the receiver
@@ -206,8 +217,8 @@ class CollectorConfig:
     enable_amplitude_bridge: bool = False
     #: F5 Amplitude origin allowlist (AmplitudeBridge.scala:56-112)
     amplitude_allowed_domains: tuple[str, ...] = ()
-    # engine-only knob: freeze nondeterministic exprs (uuid/now) for tests —
-    # when set, uuids derive from request_id and "now" is this epoch-millis.
+    # engine-only knob for tests: when set, every event time (and cookie
+    # expiry base) is this epoch-millis instead of the row's request_time
     deterministic_now_ms: int | None = None
 
     @property

@@ -49,7 +49,7 @@ _CFG = CollectorConfig(
     enable_amplitude_bridge=True,
 )
 
-# DuckDB replica of identity._uuid_expr's deterministic v4-shaped UUID.
+# DuckDB replica of identity._UUID_FRAG, the md5-derived v4-shaped UUID.
 _DUCK_UUID = (
     "substr(md5(request_id),1,8) || '-' || substr(md5(request_id),9,4)"
     " || '-4' || substr(md5(request_id),14,3)"
@@ -349,8 +349,8 @@ def collector_bounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2 cookie-bounce semantics (CollectorService.scala:134-141) through
     the real enrich stage: bounce fires only for pixel GETs with an
     unresolvable nuid that aren't already carrying the n3pc marker and
-    aren't redirects.  deterministic_now_ms freezes the fresh-uuid branch
-    so ALL nuid outcomes (fallback / md5-uuid / qs) are oracle-exact."""
+    aren't redirects.  The fresh-uuid branch derives from request_id, so
+    ALL nuid outcomes (fallback / md5-uuid / qs) are oracle-exact."""
     e = table(spark, sf_dir, "events")
     uid = F.col("user_id")
     uid_s = uid.cast("string")
@@ -382,8 +382,8 @@ def collector_bounce_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").alias("request_time"),
     )
     enriched = pipeline.enrich(raw, _BOUNCE_CFG)
-    # deterministic_now_ms freezes the fresh-uuid branch to an md5-derived
-    # v4-shaped uuid of request_id, which the oracle reproduces exactly
+    # the fresh-uuid branch is an md5-derived v4-shaped uuid of
+    # request_id, which the oracle reproduces exactly
     return enriched.select(
         "request_id",
         "bounce",

@@ -22,6 +22,21 @@ rejected rows.
 
 Batch callers compose the halves: ``run(route(raw, cfg), cfg)``.
 
+Every value is a function of the request row alone.  The event's
+``timestamp`` (and a bad row's ``failure_timestamp``) is when the
+receiver got the request, its ``request_time`` (CollectorService.scala:291
+stamps it while handling the request).  New ids (a cookieless
+``network_user_id``, ``partition_key``) derive from ``request_id``
+(``transforms.identity``).  So the pipeline takes receiver-stamped rows:
+the receiver stamps both columns on every row it lands, and the Kafka
+source stamps a record that lacks them from the record itself
+(``streaming.job.requests_from_kafka``).  A batch caller's row without
+``request_time`` gets a null ``timestamp``, omitted from the Thrift
+record like an optional field (Snowplow enrich then reads a
+``collector_tstamp`` of 0); one without ``request_id`` gets null new ids.
+So a row routes to the same output in any batch, a replay rewrites the
+same rows, and a streaming query's generated code compiles once.
+
 Scale: the pipeline is shuffle-free end-to-end (narrow transformations
 only — even the amplitude explode is per-row fan-out).  Sink partitioning
 is by ``partition_key``, exactly the reference's Kinesis/Kafka keying.
@@ -143,17 +158,12 @@ def route(raw: DataFrame, cfg: CollectorConfig) -> DataFrame:
     )
     exploded = amplitude.rewrite_event(exploded)
 
-    ts = (
-        f"cast({cfg.deterministic_now_ms} as bigint)"
-        if cfg.deterministic_now_ms is not None
-        else "unix_millis(current_timestamp())"
-    )
     payload = exploded.selectExpr(
         "qs_valid as is_event",
         "request_id",
         f"{sql_str(COLLECTOR_PAYLOAD_SCHEMA)} as schema",
         "ip_address",
-        f"{ts} as timestamp",
+        f"{identity.request_time_ms(cfg)} as timestamp",
         "'UTF-8' as encoding",
         f"{sql_str(cfg.collector_tag)} as collector",
         "querystring",

@@ -47,7 +47,7 @@ from http.cookies import SimpleCookie
 from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qsl, urlencode, urlsplit
 
-from .config import EVENT_PATH_RE, ZERO_UUID, CollectorConfig
+from .config import EVENT_PATH_RE, ZERO_UUID, CollectorConfig, request_uuid
 from .schema import PIXEL_GIF_BASE64
 from .transforms.privacy import _URL_HOST_RE
 
@@ -320,7 +320,9 @@ def make_handler(cfg: CollectorConfig, writer: LandingWriter, sinks: tuple = ())
             elif bouncing:
                 nuid = cfg.cookie_bounce.fallback_network_user_id
             else:
-                nuid = str(uuid.uuid4())
+                # the nuid the pipeline derives for the stored event
+                # (CollectorService.scala:133-141: one nuid for both)
+                nuid = request_uuid(row["request_id"])
             dnt = self._do_not_track(row)
             if not dnt and not bounce:  # F1/F2: not stored, response still sent
                 try:

@@ -5,10 +5,18 @@ from __future__ import annotations
 
 import base64
 import sys
+import threading
 
 from pyspark.sql import DataFrame
 
 from .base import Sink
+
+# The collector writes a micro-batch's good and bad sinks from two
+# threads, and both may print to one stream.  ``print`` writes the record
+# and its newline separately, and a buffer flush inside the first write
+# lets the other thread in between, gluing two records onto one line; one
+# write per line under one lock keeps every record a whole line.
+_LOCK = threading.Lock()
 
 
 class StdoutSink(Sink):
@@ -26,4 +34,6 @@ class StdoutSink(Sink):
         rows = (df.select(col) if col else df.toJSON()).toLocalIterator()
         for r in rows:
             payload = r[0] if col else r
-            print(base64.b64encode(payload.encode("utf-8")).decode("ascii"), file=out)
+            line = base64.b64encode(payload.encode("utf-8")).decode("ascii") + "\n"
+            with _LOCK:
+                out.write(line)

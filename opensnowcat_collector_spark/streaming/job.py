@@ -12,20 +12,45 @@ routing at every trigger without Python.  The good/bad split needs two
 outputs per micro-batch, so the per-batch half runs in ``foreachBatch`` —
 the classic good/quarantine pattern (SURVEY §1.2) with a single pass over
 each micro-batch: the routed batch is persisted, ``pipeline.run`` and both
-sink writes read the cache, then it is released.
+sink writes read the cache, then it is released.  The two writes run at
+the same time, so the bad job uses the cores the good job leaves idle.
+
+A trigger pays only for its own rows: no value of the routed rows
+depends on when, or in which batch, it is processed (the event time is
+the receiver's ``request_time``, new ids derive from ``request_id``), so
+the generated code of the first batch serves every later one.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .. import pipeline
 from ..config import CollectorConfig
 from ..schema import RAW_REQUEST_SCHEMA
 from ..sinks.base import Sink
+
+
+def requests_from_kafka(records: DataFrame) -> DataFrame:
+    """Raw request rows from Kafka records whose ``value`` is a receiver
+    row as JSON.  The pipeline derives ids from ``request_id`` and the
+    event time from ``request_time``, so a record from a producer that
+    stamps neither is stamped from the record itself: ``request_id`` from
+    its topic, partition and offset, ``request_time`` from its Kafka
+    timestamp.  A replay reads both back unchanged, so it rewrites the
+    same rows."""
+    r = F.from_json(F.col("value").cast("string"), RAW_REQUEST_SCHEMA)
+    kafka_id = F.concat_ws("-", "topic", "partition", "offset")
+    return records.select(
+        r.withField("request_id", F.coalesce(r["request_id"], kafka_id))
+        .withField("request_time", F.coalesce(r["request_time"], F.col("timestamp")))
+        .alias("r")
+    ).select("r.*")
 
 
 @dataclass
@@ -47,8 +72,6 @@ class StreamingCollector:
         return reader.json(landing_dir)
 
     def source_from_kafka(self, brokers: str, topic: str, max_offsets: int | None = None) -> DataFrame:
-        from pyspark.sql import functions as F
-
         reader = (
             self.spark.readStream.format("kafka")
             .option("kafka.bootstrap.servers", brokers)
@@ -56,18 +79,34 @@ class StreamingCollector:
         )
         if max_offsets:
             reader = reader.option("maxOffsetsPerTrigger", str(max_offsets))
-        raw = reader.load()
-        return raw.select(
-            F.from_json(F.col("value").cast("string"), RAW_REQUEST_SCHEMA).alias("r")
-        ).select("r.*")
+        return requests_from_kafka(reader.load())
 
     def process_batch(self, routed: DataFrame, epoch_id: int) -> None:
-        """One micro-batch of ``pipeline.route`` rows -> both sinks."""
+        """One micro-batch of ``pipeline.route`` rows -> both sinks, written
+        at the same time: the bad write runs on its own thread while this
+        one writes the good rows, and either failure fails the batch.  An
+        ``InheritableThread`` carries this thread's local properties, the
+        streaming query id among them, which ``ParquetSink`` files the
+        batch under."""
         routed = routed.persist()
         try:
             res = pipeline.run(routed, self.cfg)
-            self.good_sink.write(res.good, epoch_id)
-            self.bad_sink.write(res.bad, epoch_id)
+            bad_error: list[BaseException] = []
+
+            def write_bad() -> None:
+                try:
+                    self.bad_sink.write(res.bad, epoch_id)
+                except BaseException as e:  # re-raised on this thread
+                    bad_error.append(e)
+
+            bad = InheritableThread(write_bad)
+            bad.start()
+            try:
+                self.good_sink.write(res.good, epoch_id)
+            finally:
+                bad.join()
+            if bad_error:
+                raise bad_error[0]
         finally:
             routed.unpersist()
 

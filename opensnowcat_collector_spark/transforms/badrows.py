@@ -5,7 +5,8 @@ maxBytes/10), CollectorService.scala:184-195 (GenericError on illegal
 querystring); self-describing envelope per snowplow-badrows.
 
 Bad rows are structured columns here (BAD_ROW_SCHEMA); ``to_self_describing_json``
-renders the wire format for sinks.
+renders the wire format for sinks.  A bad row's ``failure_timestamp`` is
+its payload's ``timestamp``, the time the receiver got the request.
 """
 
 from __future__ import annotations
@@ -16,12 +17,6 @@ from pyspark.sql import functions as F
 from ..config import CollectorConfig
 from ..schema import GENERIC_ERROR_SCHEMA, SIZE_VIOLATION_SCHEMA
 from ..sqlfrag import sql_str
-
-
-def _now_ms(cfg: CollectorConfig) -> str:
-    if cfg.deterministic_now_ms is not None:
-        return f"cast({cfg.deterministic_now_ms} as bigint)"
-    return "unix_millis(current_timestamp())"
 
 
 def size_violation(
@@ -41,7 +36,7 @@ def size_violation(
         "'kind', 'size_violation',"
         f" 'app_name', {sql_str(cfg.app_name)},"
         f" 'app_version', {sql_str(cfg.app_version)},"
-        f" 'failure_timestamp', {_now_ms(cfg)},"
+        " 'failure_timestamp', timestamp,"
         f" 'maximum_allowed_size_bytes', cast({max_bytes} as int),"
         f" 'actual_size_bytes', cast({actual_size} as int),"
         f" 'expectation', concat('oversized collector payload: ', {expectation}),"
@@ -59,7 +54,7 @@ def generic_error(cfg: CollectorConfig, errors: str, payload: str) -> Column:
         "'kind', 'generic_error',"
         f" 'app_name', {sql_str(cfg.app_name)},"
         f" 'app_version', {sql_str(cfg.app_version)},"
-        f" 'failure_timestamp', {_now_ms(cfg)},"
+        " 'failure_timestamp', timestamp,"
         " 'maximum_allowed_size_bytes', cast(NULL as int),"
         " 'actual_size_bytes', cast(NULL as int),"
         " 'expectation', cast(NULL as string),"

@@ -1,4 +1,5 @@
-"""T1 network-user-id resolution + T2 ip/partition-key extraction.
+"""T1 network-user-id resolution + T2 ip/partition-key extraction, and
+the event time.
 
 reference: CollectorService.scala:133-141,520-547.
 
@@ -6,12 +7,22 @@ Resolution order (T1):
 1. ``SP-Anonymous`` header present -> constant all-zero UUID
 2. ``nuid`` query parameter
 3. collector cookie value
-4. if bouncing -> configured fallback nuid, else random UUID
+4. if bouncing -> configured fallback nuid, else a new UUID
 
-Nondeterminism: ``uuid()`` is frozen to a request-id-derived UUID when
-``cfg.deterministic_now_ms`` is set, so golden tests compare exact values
-(the reference's tests face the same issue and assert only structure —
-SURVEY §7 risk register).
+A new id (the cookieless ``network_user_id``, ``partition_key``) is
+derived from the request's ``request_id``: a v4-shaped UUID cut from its
+md5.  The receiver draws ``request_id`` as a random ``uuid4`` per
+request, so ids stay unique per request, and the receiver's twin
+(``config.request_uuid``) puts the same nuid in its Set-Cookie.  Only
+stamped rows are supported: both streaming sources stamp every row
+(``streaming.job``), and a batch caller's row without ``request_id``
+gets null new ids, never one value shared by all such rows.  The
+event time (``request_time_ms``) is when the receiver got the request,
+its ``request_time``, as the reference stamps it while handling the
+request (CollectorService.scala:291).  So no value depends on when, or
+in which micro-batch, a row is processed: a streaming query compiles its
+generated code once, a replayed batch writes the same rows, and golden
+tests compare exact values.
 
 Expressions are parsed SQL fragments (``sqlfrag``): identical trees,
 one py4j call per transform (optimization r14).
@@ -26,16 +37,24 @@ from ..config import ZERO_UUID, CollectorConfig
 from ..sqlfrag import sql_str
 
 
-def _uuid_frag(cfg: CollectorConfig, seed_col: str = "request_id") -> str:
+_H = "md5(request_id)"
+#: v4-shaped UUID from md5(request_id); ``config.request_uuid`` is its
+#: Python twin.  ``concat`` keeps a null ``request_id``'s id null, not
+#: the empty string every such row would share.
+_UUID_FRAG = (
+    f"concat(substring({_H}, 1, 8), '-', substring({_H}, 9, 4),"
+    f" '-4', substring({_H}, 14, 3), '-8', substring({_H}, 18, 3),"
+    f" '-', substring({_H}, 21, 12))"
+)
+
+
+def request_time_ms(cfg: CollectorConfig) -> str:
+    """Event time in epoch millis: when the receiver got the request
+    (``request_time``; null when the row has none), or
+    ``cfg.deterministic_now_ms`` when set."""
     if cfg.deterministic_now_ms is not None:
-        # deterministic v4-shaped UUID from md5(request_id)
-        h = f"md5({seed_col})"
-        return (
-            f"concat_ws('-', substring({h}, 1, 8), substring({h}, 9, 4),"
-            f" concat('4', substring({h}, 14, 3)),"
-            f" concat('8', substring({h}, 18, 3)), substring({h}, 21, 12))"
-        )
-    return "uuid()"
+        return f"cast({cfg.deterministic_now_ms} as bigint)"
+    return "unix_millis(request_time)"
 
 
 def resolve_network_user_id(df: DataFrame, cfg: CollectorConfig) -> DataFrame:
@@ -51,7 +70,7 @@ def resolve_network_user_id(df: DataFrame, cfg: CollectorConfig) -> DataFrame:
     nuid = (
         f"coalesce({nuid_opt}, CASE WHEN {bouncing}"
         f" THEN {sql_str(cfg.cookie_bounce.fallback_network_user_id)}"
-        f" ELSE {_uuid_frag(cfg)} END)"
+        f" ELSE {_UUID_FRAG} END)"
     )
     return df.withColumns(
         {
@@ -66,16 +85,16 @@ def ip_and_partition_key(df: DataFrame, cfg: CollectorConfig) -> DataFrame:
     """ip 'unknown' fallback + partition key (ip or UUID).
     The partition key feeds sink partitioning (Kafka key / repartition) —
     with useIpAddressAsPartitionKey the stream co-locates per-client events
-    (useful for sessionization but skew-prone at scale; random UUID is the
-    default for uniform shard load, exactly as in the reference)."""
+    (useful for sessionization but skew-prone at scale; a per-request UUID
+    is the default for uniform shard load, as in the reference)."""
     use_ip = "true" if cfg.use_ip_address_as_partition_key else "false"
     return df.withColumns(
         {
             "ip_address": F.expr("coalesce(remote_ip, 'unknown')"),
             "partition_key": F.expr(
-                f"CASE WHEN remote_ip IS NULL THEN {_uuid_frag(cfg)}"
+                f"CASE WHEN remote_ip IS NULL THEN {_UUID_FRAG}"
                 f" WHEN {use_ip} THEN remote_ip"
-                f" ELSE {_uuid_frag(cfg)} END"
+                f" ELSE {_UUID_FRAG} END"
             ),
         }
     )

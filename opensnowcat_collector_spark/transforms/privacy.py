@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..config import CollectorConfig
 from ..sqlfrag import sql_str, sql_str_list
+from .identity import request_time_ms
 
 
 def do_not_track(df: DataFrame, cfg: CollectorConfig) -> DataFrame:
@@ -101,11 +102,6 @@ def set_cookie_struct(df: DataFrame, cfg: CollectorConfig) -> DataFrame:
             "struct<name:string,value:string,expires_ms:bigint,domain:string,path:string,"
             "secure:boolean,http_only:boolean,same_site:string>"
         ))
-    now_ms = (
-        str(cfg.deterministic_now_ms)
-        if cfg.deterministic_now_ms is not None
-        else "unix_millis(current_timestamp())"
-    )
     same_site = (
         f"cast({sql_str(cfg.cookie.same_site)} as string)"
         if cfg.cookie.same_site is not None
@@ -114,7 +110,7 @@ def set_cookie_struct(df: DataFrame, cfg: CollectorConfig) -> DataFrame:
     struct = (
         f"named_struct('name', {sql_str(cfg.cookie.name)},"
         " 'value', network_user_id,"
-        f" 'expires_ms', {now_ms} + {cfg.cookie.expiration_ms},"
+        f" 'expires_ms', {request_time_ms(cfg)} + {cfg.cookie.expiration_ms},"
         " 'domain', cookie_domain,"
         " 'path', '/',"
         f" 'secure', {'true' if cfg.cookie.secure else 'false'},"

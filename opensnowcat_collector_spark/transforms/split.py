@@ -117,10 +117,6 @@ def serialize_payload(row: dict) -> str:
 
 def payload_size(row: dict) -> int:
     """Serialized-Thrift size of a payload (reference parity)."""
-    ts = row.get("timestamp")
-    if ts is not None:
-        row = dict(row)
-        row["timestamp"] = int(ts)
     return len(encode_collector_payload(row))
 
 
@@ -278,6 +274,10 @@ def make_split_map_fn(max_bytes: int):
                 if headers is not None and not isinstance(headers, list):
                     headers = list(headers)
                     rec["headers"] = headers
+                # a null timestamp (a row without request_time) turns the
+                # whole Arrow column into float64 with NaN
+                ts = rec.get("timestamp")
+                rec["timestamp"] = None if pd.isna(ts) else int(ts)
                 goods, bads = split_and_serialize(rec, max_bytes)
                 base = {k: rec.get(k) for k in payload_field_names}
                 for i, g in enumerate(goods):

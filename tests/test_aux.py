@@ -212,6 +212,34 @@ def test_main_once_processes_landing_and_exits(tmp_path, capsys, monkeypatch):
     assert "encoding" in decoded
 
 
+def test_main_once_restart_lands_each_row_once(tmp_path, spark):
+    """Two ``--once`` runs over one ``--landing`` dir, without
+    ``--checkpoint``, into the same file sinks: the second run resumes
+    from the checkpoint kept next to the landing dir (``<landing>.checkpoint``)
+    and re-reads nothing, so each row lands exactly once."""
+    from opensnowcat_collector_spark.__main__ import main
+    from tests.fixtures import raw_requests
+    from tests.test_streaming import _write_landing
+
+    landing = str(tmp_path / "landing")
+    _write_landing(landing, raw_requests())
+    good_dir, bad_dir = tmp_path / "good", tmp_path / "bad"
+    conf = tmp_path / "c.hocon"
+    conf.write_text(
+        f'streams {{\n  good = "{good_dir}"\n  bad = "{bad_dir}"\n'
+        "  sink {\n    enabled = parquet\n  }\n}\n"
+    )
+    argv = ["--once", "--config", str(conf), "--landing", landing, "--port", "0"]
+    assert main(argv) == 0
+    first = spark.read.parquet(str(good_dir)).count()
+    assert main(argv) == 0
+    good = spark.read.parquet(str(good_dir)).collect()
+    assert len(good) == first > 0
+    assert len({r["run"] for r in good}) == 1
+    assert (tmp_path / "landing.checkpoint").is_dir()
+    assert spark.read.parquet(str(bad_dir)).select("run").distinct().count() == 1
+
+
 def test_main_without_config_uses_reference_defaults(tmp_path, monkeypatch):
     """python -m opensnowcat_collector_spark without --config runs on the
     reference defaults (REFERENCE_DEFAULTS: secure, HttpOnly,

@@ -190,6 +190,28 @@ def test_landing_rows_flow_through_pipeline(server, spark):
     assert all(r["path"] == "/i" for r in good)
 
 
+def test_cookieless_set_cookie_is_stored_nuid(tmp_path, spark):
+    """A cookieless request gets one nuid, in its Set-Cookie and in its
+    stored event (CollectorService.scala:133-141), under the production
+    config (``deterministic_now_ms`` unset)."""
+    from opensnowcat_collector_spark import pipeline
+    from opensnowcat_collector_spark.schema import RAW_REQUEST_SCHEMA
+
+    cfg = CollectorConfig()
+    srv = CollectorServer(cfg, str(tmp_path / "landing"))
+    srv.start()
+    try:
+        with _get(f"http://127.0.0.1:{srv.port}/i?e=pv") as resp:
+            cookie = resp.headers["Set-Cookie"]
+    finally:
+        srv.stop()  # publishes the landing file
+    nuid = cookie.split(";")[0].removeprefix(f"{cfg.cookie.name}=")
+    raw = spark.read.schema(RAW_REQUEST_SCHEMA).json(srv.writer.landing_dir)
+    good = pipeline.run(pipeline.route(raw, cfg), cfg).good.collect()
+    assert [r["network_user_id"] for r in good] == [nuid]
+    assert good[0]["timestamp"] is not None  # the receiver's request_time
+
+
 @pytest.fixture()
 def bounce_server(tmp_path):
     cfg = CollectorConfig(

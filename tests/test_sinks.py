@@ -155,6 +155,50 @@ def test_retrying_parquet_sink_lands_batch_once(spark, tmp_path):
     assert _ids(spark.read.parquet(path)) == [0, 1, 2, 3, 4]
 
 
+def test_stdout_sinks_on_one_stream_from_two_threads(spark, tmp_path, monkeypatch):
+    """The collector writes the good and the bad sink of a batch at the
+    same time, and both stdout sinks may share one stream: every output
+    line is still one whole base64 record."""
+    import base64
+    import io
+    import threading
+
+    from opensnowcat_collector_spark.sinks.stdout import StdoutSink
+
+    # records larger than the text buffer flush inside every write; cached,
+    # so the two threads spend their time printing, not computing
+    frames = {
+        kind: spark.range(0, 600, 1, 2).selectExpr(
+            f"concat('{kind}-', id, '-', repeat('x', 12000)) as serialized"
+        ).cache()
+        for kind in ("good", "bad")
+    }
+    expected = sorted(r.serialized for df in frames.values() for r in df.collect())
+    path = tmp_path / "out.txt"
+    with io.open(path, "w", encoding="ascii") as out:
+        monkeypatch.setattr("sys.stdout", out)
+        errors = []
+
+        def write(df):
+            try:
+                StdoutSink().write(df)
+            except BaseException as e:
+                errors.append(e)
+
+        threads = [threading.Thread(target=write, args=(df,)) for df in frames.values()]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    for df in frames.values():
+        df.unpersist()
+    assert not errors
+    lines = path.read_text(encoding="ascii").split("\n")
+    assert lines.pop() == ""
+    got = sorted(base64.b64decode(ln, validate=True).decode("utf-8") for ln in lines)
+    assert got == expected
+
+
 def test_health_probe_flips_and_recovers():
     """Active probe (KinesisSink.scala:372-395 analogue): a failing probe
     marks the sink unhealthy; a succeeding probe recovers probe-detected

@@ -541,13 +541,25 @@ class _CrashOnce(Sink):
 
 
 @pytest.mark.parametrize(
-    "point", ["before_good_write", "between_good_and_bad", "after_bad_before_commit"]
+    "point, deterministic",
+    [
+        pytest.param("before_good_write", True, id="before_good_write"),
+        pytest.param("between_good_and_bad", True, id="between_good_and_bad"),
+        pytest.param("after_bad_before_commit", True, id="after_bad_before_commit"),
+        pytest.param("both_sinks", True, id="both_sinks"),
+        pytest.param("between_good_and_bad", False, id="production_between_good_and_bad"),
+        pytest.param("both_sinks", False, id="production_both_sinks"),
+    ],
 )
-def test_collector_replay_after_crash_exactly_once(spark, tmp_path, point):
+def test_collector_replay_after_crash_exactly_once(spark, tmp_path, point, deterministic):
     """A micro-batch that dies at any point is replayed from the
     checkpoint on restart, into the same ``ParquetSink`` dirs: good and
     bad rows end up exactly those of ``run(route(raw))``, none lost and
-    none twice (the sink overwrites the replayed epoch)."""
+    none twice (the sink overwrites the replayed epoch), each in the
+    query's one run directory.  The two writes run at the same time, so
+    both sinks may fail on one epoch.  Under the production config
+    (``deterministic_now_ms`` unset) the replay writes the same values
+    too: no output value depends on when a row is processed."""
     from opensnowcat_collector_spark import pipeline
     from opensnowcat_collector_spark.schema import RAW_REQUEST_SCHEMA
 
@@ -555,7 +567,7 @@ def test_collector_replay_after_crash_exactly_once(spark, tmp_path, point):
     for b in range(3):
         _write_landing(landing, _mixed_requests(100 * b), name=f"batch{b}.json")
     cfg = CollectorConfig(
-        deterministic_now_ms=1705320000000,
+        deterministic_now_ms=1705320000000 if deterministic else None,
         good_sink=SinkConfig(max_bytes=1500),
         enable_analyticsjs_bridge=True,
         enable_amplitude_bridge=True,
@@ -566,6 +578,9 @@ def test_collector_replay_after_crash_exactly_once(spark, tmp_path, point):
         good = _CrashOnce(good, epoch=1, after=False)
     elif point == "between_good_and_bad":
         good = _CrashOnce(good, epoch=1, after=True)
+    elif point == "both_sinks":
+        good = _CrashOnce(good, epoch=1, after=False)
+        bad = _CrashOnce(bad, epoch=1, after=True)
     else:
         bad = _CrashOnce(bad, epoch=1, after=True)
     job = StreamingCollector(spark, cfg, good, bad)
@@ -587,6 +602,9 @@ def test_collector_replay_after_crash_exactly_once(spark, tmp_path, point):
     want = pipeline.run(pipeline.route(raw, cfg), cfg)
     got_good = spark.read.parquet(good_dir)
     assert got_good.select("run").distinct().count() == 1  # the restart resumed the run
+    # the bad rows sit in the same one run, the streaming query's
+    runs = lambda df: {r["run"] for r in df.select("run").distinct().collect()}
+    assert runs(spark.read.parquet(bad_dir)) == runs(got_good) == {str(q.id)}
     got_good = got_good.drop("run", "epoch").collect()
     got_bad = spark.read.parquet(bad_dir).drop("run", "epoch").collect()
     want_good, want_bad = want.good.collect(), want.bad.collect()
@@ -655,6 +673,118 @@ def test_streaming_generated_ids_unique_across_batches(spark, tmp_path):
     for col in ("partition_key", "network_user_id"):
         values = [r[col] for r in rows]
         assert len(set(values)) == len(values), col
+
+
+def test_streaming_compiles_generated_code_once(spark, tmp_path):
+    """Production config (``deterministic_now_ms`` unset): the streaming
+    plan is built once and no value of a routed row depends on its batch
+    (the event time is ``request_time``, new ids derive from
+    ``request_id``), so whole-stage codegen compiles Java code in the
+    first micro-batch only; a clock or ``uuid()`` seed folded into the
+    plan would make every batch compile again."""
+    landing = str(tmp_path / "landing")
+    n_files = 4
+    for b in range(n_files):
+        _write_landing(landing, _mixed_requests(100 * b), name=f"batch{b}.json")
+    cfg = CollectorConfig(
+        good_sink=SinkConfig(max_bytes=1500),
+        enable_analyticsjs_bridge=True,
+        enable_amplitude_bridge=True,
+    )
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    job = StreamingCollector(
+        spark, cfg, ParquetSink(str(tmp_path / "good")), ParquetSink(str(tmp_path / "bad"))
+    )
+    compiles = []
+    inner = job.process_batch
+
+    def process_batch(routed, epoch_id):
+        inner(routed, epoch_id)
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount())
+
+    job.process_batch = process_batch
+    q = job.start(
+        job.source_from_files(landing, max_files_per_trigger=1),
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    assert len(compiles) == n_files
+    assert compiles[1:] == [compiles[0]] * (n_files - 1)
+
+
+def test_row_without_request_time_has_null_timestamp(spark):
+    """Production config: the event time is the receiver's
+    ``request_time``; a row without one gets a null ``timestamp`` (and
+    bad-row ``failure_timestamp``), left out of the Thrift size like an
+    optional field, also through the Python split of an oversized row
+    that shares its Arrow batch with a timed one.  A cookieless row
+    without ``request_id`` gets null new ids, not a value shared by
+    every such row."""
+    from opensnowcat_collector_spark import pipeline
+    from opensnowcat_collector_spark.schema import RAW_REQUEST_SCHEMA
+    from opensnowcat_collector_spark.transforms.split import payload_size, serialize_payload
+
+    from .fixtures import _req
+
+    rows = _mixed_requests(0) + _mixed_requests(10)
+    for r in rows[0:7:2]:
+        r["request_time"] = None
+    timeless = {r["request_id"] for r in rows if r["request_time"] is None}
+    rows += [_req(30 + i, request_id=None, cookies={}, querystring="e=pv") for i in range(2)]
+    raw = spark.createDataFrame(rows, RAW_REQUEST_SCHEMA).coalesce(1)
+    cfg = CollectorConfig(good_sink=SinkConfig(max_bytes=1500))
+    res = pipeline.run(pipeline.route(raw, cfg), cfg)
+    good = res.good.collect()
+    split = {r["request_id"] for r in good if r["split_index"] > 0}
+    assert split == {"req-0002", "req-0012"} and "req-0002" in timeless
+    for r in good:
+        assert (r["timestamp"] is None) == (r["request_id"] in timeless), r["request_id"]
+        assert r["serialized"] == serialize_payload(r.asDict())
+        assert r["serialized_size"] == payload_size(r.asDict())
+    unstamped = [r for r in good if r["request_id"] is None]
+    assert len(unstamped) == 2
+    assert all(r["network_user_id"] is None and r["partition_key"] is None for r in unstamped)
+    # req-0002's unsplittable element and req-0006's oversized GET have no
+    # time; req-0012's and req-0016's do, as do both invalid querystrings
+    bad = Counter((b["kind"], b["failure_timestamp"] is None) for b in res.bad.collect())
+    assert bad == {("size_violation", True): 2, ("size_violation", False): 2,
+                   ("generic_error", False): 2}
+
+
+def test_kafka_records_are_stamped_from_the_record(spark):
+    """A Kafka record whose producer stamped no ``request_id`` or
+    ``request_time`` gets them from its topic, partition and offset and
+    its Kafka timestamp, so its ids are its own and its event time is
+    when Kafka took it; a stamped record keeps its own values."""
+    import datetime
+
+    from opensnowcat_collector_spark import pipeline
+    from opensnowcat_collector_spark.config import request_uuid
+    from opensnowcat_collector_spark.streaming.job import requests_from_kafka
+
+    from .fixtures import _req
+
+    stamped = _req(1, cookies={}, querystring="e=pv")
+    bare = {k: v for k, v in stamped.items() if k not in ("request_id", "request_time")}
+    utc = datetime.timezone.utc
+    kafka_time = datetime.datetime(2024, 5, 1, 12, 0, 0, tzinfo=utc)
+    records = spark.createDataFrame(
+        [
+            (json.dumps(v, default=str).encode(), "raw", p, o, kafka_time)
+            for v, p, o in ((stamped, 0, 5), (bare, 2, 7), (bare, 2, 8))
+        ],
+        "value binary, topic string, partition int, offset long, timestamp timestamp",
+    )
+    raw = requests_from_kafka(records)
+    cfg = CollectorConfig()
+    got = {r["request_id"]: r for r in pipeline.run(pipeline.route(raw, cfg), cfg).good.collect()}
+    assert sorted(got) == ["raw-2-7", "raw-2-8", "req-0001"]
+    for rid, r in got.items():
+        assert r["network_user_id"] == r["partition_key"] == request_uuid(rid)
+    assert got["raw-2-7"]["timestamp"] == int(kafka_time.timestamp() * 1000)
+    assert got["req-0001"]["timestamp"] == int(stamped["request_time"].replace(tzinfo=utc).timestamp() * 1000)
 
 
 def test_streaming_document_curation(spark, tmp_path):
